@@ -96,7 +96,10 @@ object Main {
     val src = spark.read.format("sri").option("pages", pages).load()
     val staged: DataFrame = src.where(col("resourcetype") =!= "deleted" ||
       col("resourcetype").isNull)
-    val tombs = src.where(col("resourcetype") === "deleted").select("href")
+    // modified_ms stays so deltaSync can fence the tombstone pass with the
+    // watermark, which the source then sends as `modifiedSince=`
+    val tombs = src.where(col("resourcetype") === "deleted")
+      .select("href", "modified_ms")
 
     opts.getOrElse("synctype", "deltaSync") match {
       case "fullSync" => runner.fullSync(staged, target)

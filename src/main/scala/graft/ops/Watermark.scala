@@ -68,8 +68,9 @@ object Watermark {
     * (reference: getLastSyncDates, src/lib/client.js:614-699). */
   def readState(spark: SparkSession, statePath: String, tablename: String,
                 synctype: String): Option[graft.SyncState] = {
-    val p = new java.io.File(statePath)
-    if (!p.exists()) return None
+    // a crash between the two renames of writeState parks the state at
+    // .bak; reading past it would cold-start the next deltaSync from 1900
+    if (!AtomicDir.restore(statePath)) return None
     val rows = spark.read.parquet(statePath)
       .where(col("tablename") === tablename && col("synctype") === synctype)
       .select("lastmodified", "syncstart").limit(1).collect()
@@ -95,22 +96,8 @@ object Watermark {
       .toDF("tablename", "baseurl", "path", "synctype", "lastmodified", "syncstart")
     val merged = existing.unionByName(row).coalesce(1)
     merged.write.mode("overwrite").parquet(statePath + ".tmp")
-    val tmp = new java.io.File(statePath + ".tmp")
-    val dst = new java.io.File(statePath)
-    val bak = new java.io.File(statePath + ".bak")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-    }
-    // swap with a parked backup (same protocol as ParquetTarget.overwrite):
     // a failed rename must not silently lose the watermark — losing it
     // falls back to a cold-start re-sync from 1900
-    if (bak.exists()) rm(bak)
-    if (dst.exists() && !dst.renameTo(bak))
-      throw new java.io.IOException(s"could not park $statePath at .bak")
-    if (!tmp.renameTo(dst)) {
-      bak.renameTo(dst)
-      throw new java.io.IOException(s"state rename $statePath failed")
-    }
-    if (bak.exists()) rm(bak)
+    AtomicDir.swap(statePath + ".tmp", statePath)
   }
 }

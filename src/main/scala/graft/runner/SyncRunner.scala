@@ -23,33 +23,12 @@ trait TargetTable {
   * At cluster scale the rename becomes a metastore/table-format commit
   * (Iceberg/Delta); the runner contract is unchanged. */
 final class ParquetTarget(spark: SparkSession, path: String) extends TargetTable {
-  override def exists: Boolean = {
-    val dst = new java.io.File(path)
-    val bak = new java.io.File(path + ".bak")
-    if (!dst.exists() && bak.exists()) bak.renameTo(dst) // crash recovery
-    dst.exists()
-  }
+  override def exists: Boolean = AtomicDir.restore(path)
   override def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
   override def overwrite(df: DataFrame): Unit = {
     val tmp = path + ".staging"
     df.write.mode("overwrite").parquet(tmp)
-    val dst = new java.io.File(path)
-    val bak = new java.io.File(path + ".bak")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-    }
-    // swap, don't delete-then-rename: the live table is parked at .bak
-    // until the new one is in place, so a crash mid-commit leaves either
-    // the old table (at .bak, restored below/next run) or the new one —
-    // never nothing (T6)
-    if (bak.exists()) rm(bak)
-    if (dst.exists() && !dst.renameTo(bak))
-      throw new java.io.IOException(s"could not park $path at .bak")
-    if (!new java.io.File(tmp).renameTo(dst)) {
-      bak.renameTo(dst) // restore
-      throw new java.io.IOException(s"atomic rename $tmp -> $path failed")
-    }
-    if (bak.exists()) rm(bak)
+    AtomicDir.swap(tmp, path)
   }
 }
 
@@ -71,8 +50,12 @@ final case class SyncResult(
   * fullSync / deltaSync / safeDeltaSync compose the Merge/Diff/Watermark
   * operators into one Catalyst plan per sync, then commit target + state.
   *
-  *  - T1 watermark: read from the state table, pushed into the source as a
-  *    `modified >= wm` filter (parquet row-group pruning / DSv2 pushdown).
+  *  - T1 watermark: read from the state table and applied as a
+  *    `modified >= wm` filter on the live pass and as
+  *    `modified >= wm OR modified IS NULL` on the tombstone pass (when the
+  *    tombstones carry the modified column). On parquet this prunes row
+  *    groups; the SRI source turns either bound into `modifiedSince=` on
+  *    the request URL (only that bound reaches the URL).
   *  - T4 single-flight: a sync rejects immediately if another is running
   *    on this runner (reference: client.js:1628-1631).
   *  - T6 atomicity: target overwrite is atomic; the watermark is written

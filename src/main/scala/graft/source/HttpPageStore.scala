@@ -24,6 +24,13 @@ package graft.source
   * identically in cluster mode, unlike a driver-local disk spool whose
   * files executors could not read.
   *
+  * The store fetches the URLs it is given: the only pushdown on the wire is
+  * the `modifiedSince=` that [[HttpPageStore.withModifiedSince]] puts into
+  * the first-page URL (SriScanBuilder does so when a `modified_ms` lower
+  * bound was pushed). Later pages follow the server's next links, which
+  * carry the parameter forward. `resourcetype` filters and column pruning
+  * are applied at parse time and never rewrite a URL.
+  *
   * `fetchFn` is injectable so the walk/retry logic is testable offline;
   * the default uses HttpURLConnection (no third-party deps) and applies
   * `headers` to every request.
@@ -112,6 +119,37 @@ final class HttpPageStore(
 }
 
 object HttpPageStore {
+  private val isoMillis = java.time.format.DateTimeFormatter
+    .ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSS'Z'")
+    .withZone(java.time.ZoneOffset.UTC)
+
+  /** Epoch millis as JavaScript's `Date.toISOString()` renders it, the
+    * format the reference sends (`1900-01-01T00:00:00.000Z`). */
+  private def isoString(ms: Long): String =
+    isoMillis.format(java.time.Instant.ofEpochMilli(ms))
+
+  /** `url` with `modifiedSince=<iso>` for the lower bound `minMs` (the URL
+    * itself when there is none). A `modifiedSince` already in the URL
+    * (ISO-8601) is replaced by the later of the two. */
+  def withModifiedSince(url: String, minMs: Option[Long]): String =
+    minMs.fold(url) { ms =>
+      val q = url.indexOf('?')
+      val params = if (q < 0) Seq.empty
+        else url.substring(q + 1).split('&').toSeq.filter(_.nonEmpty)
+      val (given, rest) = params.partition(_.startsWith("modifiedSince="))
+      val since = given.map { kv =>
+        val v = java.net.URLDecoder.decode(kv.drop("modifiedSince=".length),
+          java.nio.charset.StandardCharsets.UTF_8)
+        try java.time.Instant.parse(v).toEpochMilli
+        catch {
+          case e: RuntimeException => throw new IllegalArgumentException(
+            s"unparseable modifiedSince in $url", e)
+        }
+      }.foldLeft(ms)(math.max)
+      val base = if (q < 0) url else url.substring(0, q)
+      (rest :+ s"modifiedSince=${isoString(since)}").mkString(base + "?", "&", "")
+    }
+
   /** Offset-based enumeration for the reference's `nextLinksBroken` mode:
     * page URLs are computable without any fetch. */
   def offsetPages(basePath: String, limit: Int, total: Long): Seq[String] = {

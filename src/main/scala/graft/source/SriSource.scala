@@ -6,7 +6,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual, EqualTo}
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNull, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,16 +19,27 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the reference pipelines sequentially;
   *  - envelope normalization `{results:[{href,$$expanded}]}` | plain array
   *    | href-only (utils.js:149-169) — inside the partition reader;
-  *  - predicate pushdown `modifiedSince=`/`$$meta.deleted` into the source
-  *    (client.js:1677-1703) — via SupportsPushDownFilters: accepted
-  *    filters on `modified_ms` / `resourcetype` are applied at page-parse
-  *    time (and, for an HTTP transport, folded into the request URL);
+  *  - predicate pushdown `modifiedSince=` (client.js:1666-1694) — via
+  *    SupportsPushDownFilters. Accepted: `modified_ms >[=] X`, the
+  *    tombstone fence `modified_ms >= X OR modified_ms IS NULL` (either
+  *    operand order) and `resourcetype = 'deleted'`. All of them are
+  *    applied at page-parse time. Only the `modified_ms` lower bound (the
+  *    max over every accepted bound) reaches the wire: for an HTTP
+  *    transport it is added to the first-page URL as `modifiedSince=`, and
+  *    SRI next links carry it forward. The OR form is sent too: SRI
+  *    servers filter on `$$meta.modified`, which every SRI resource
+  *    carries, and the reference fences its deleted-resources pass the
+  *    same way. The parse-time filter stays, so a server that ignores the
+  *    parameter yields the same rows;
   *  - projection pushdown `expand=NONE` (hrefs only) — via
-  *    SupportsPushDownRequiredColumns.
+  *    SupportsPushDownRequiredColumns, applied at parse time (the URL is
+  *    not rewritten; `resourcetype` is not sent either).
   *
   * Transport is pluggable: `pages` option points at a directory of JSON
-  * page files (deterministic, testable); an HTTP transport implements the
-  * same PageStore contract against a live API.
+  * page files (deterministic, testable) or at the first page of a live SRI
+  * API (`http://` / `https://`, [[HttpPageStore]]). The store is built in
+  * [[SriScanBuilder.build]], after filter pushdown, so the URL can carry
+  * the pushed bound.
   *
   * Usage: spark.read.format("sri").option("pages", dir).load()
   */
@@ -50,6 +61,17 @@ object SriSource {
     StructField("modified_ms", LongType),
     StructField("jsondata", StringType),
     StructField("resourcetype", StringType)))
+
+  /** Transport selection: a live SRI API for an `http(s)://` first-page
+    * URL, with the pushed `modified_ms` lower bound folded in as
+    * `modifiedSince=`; otherwise a directory of page files. */
+  def store(pages: String, headers: Map[String, String],
+            minModified: Option[Long]): PageStore =
+    if (pages != null &&
+        (pages.startsWith("http://") || pages.startsWith("https://")))
+      new HttpPageStore(HttpPageStore.withModifiedSince(pages, minModified),
+        headers = headers)
+    else new LocalDirPageStore(pages)
 }
 
 /** Page listing + fetch contract (the transport seam). */
@@ -84,49 +106,51 @@ class SriTable(pagesDir: String,
   override def schema(): StructType = SriSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // transport selection: a directory of page files, or a live SRI API
-    val store: PageStore =
-      if (pagesDir != null && (pagesDir.startsWith("http://") ||
-          pagesDir.startsWith("https://")))
-        new HttpPageStore(pagesDir, headers = apiHeaders)
-      else new LocalDirPageStore(pagesDir)
-    new SriScanBuilder(store)
-  }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new SriScanBuilder(pagesDir, apiHeaders)
   /** Test hook: the headers threaded from the `api.headers` option. */
   def headers: Map[String, String] = apiHeaders
 }
 
-class SriScanBuilder(store: PageStore) extends ScanBuilder
+class SriScanBuilder(pages: String, headers: Map[String, String] = Map.empty)
+    extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
-  private var pushedMinModified: Option[Long] = None
+  private var plainBound: Option[Long] = None
+  private var fenceBound: Option[Long] = None
   private var pushedDeletedOnly = false
   private var pushed: Array[Filter] = Array.empty
   private var requiredSchema: StructType = SriSource.schema
 
-  /** P4: accept `modified_ms >[=] X` (the modifiedSince watermark) and
+  private def lowerBound(f: Filter): Option[Long] = f match {
+    case GreaterThanOrEqual("modified_ms", v: java.lang.Long) => Some(v.longValue)
+    case GreaterThan("modified_ms", v: java.lang.Long) => Some(v.longValue + 1)
+    case _ => None
+  }
+
+  /** The tombstone fence `modified_ms >= X OR modified_ms IS NULL`. */
+  private def fence(f: Filter): Option[Long] = f match {
+    case Or(b, IsNull("modified_ms")) => lowerBound(b)
+    case Or(IsNull("modified_ms"), b) => lowerBound(b)
+    case _ => None
+  }
+
+  /** P4: accept `modified_ms >[=] X` (the modifiedSince watermark), the
+    * tombstone fence `modified_ms >= X OR modified_ms IS NULL` and
     * `resourcetype = 'deleted'` (the tombstone pass); everything else
     * stays a post-scan filter. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, rejected) = filters.partition {
-      case GreaterThanOrEqual("modified_ms", _: java.lang.Long) => true
-      case GreaterThan("modified_ms", _: java.lang.Long) => true
-      case EqualTo("resourcetype", "deleted") => true
-      case _ => false
-    }
+    val (accepted, rejected) = filters.partition(f =>
+      lowerBound(f).isDefined || fence(f).isDefined ||
+        f == EqualTo("resourcetype", "deleted"))
     // multiple accepted bounds conjoin: keep the MAX (they were all
     // removed from post-scan evaluation, so last-wins would return rows
     // the query excludes)
-    def tighten(v: Long): Unit =
-      pushedMinModified = Some(pushedMinModified.fold(v)(math.max(_, v)))
-    accepted.foreach {
-      case GreaterThanOrEqual("modified_ms", v: java.lang.Long) =>
-        tighten(v.longValue)
-      case GreaterThan("modified_ms", v: java.lang.Long) =>
-        tighten(v.longValue + 1)
-      case EqualTo("resourcetype", "deleted") => pushedDeletedOnly = true
-      case _ =>
+    def tighten(cur: Option[Long], v: Long) = Some(cur.fold(v)(math.max(_, v)))
+    accepted.foreach { f =>
+      lowerBound(f).foreach(v => plainBound = tighten(plainBound, v))
+      fence(f).foreach(v => fenceBound = tighten(fenceBound, v))
+      if (f == EqualTo("resourcetype", "deleted")) pushedDeletedOnly = true
     }
     pushed = accepted
     rejected
@@ -139,50 +163,66 @@ class SriScanBuilder(store: PageStore) extends ScanBuilder
       SriSource.schema.fields.filter(f => required.fieldNames.contains(f.name)))
   }
 
-  override def build(): Scan = new SriScan(store, requiredSchema,
-    pushedMinModified, pushedDeletedOnly)
+  override def build(): Scan = {
+    // conjoined with a plain bound the fence admits no undated row:
+    // (m >= a OR m IS NULL) AND m >= b  ==  m >= max(a, b)
+    val minModified = (plainBound ++ fenceBound).maxOption
+    val keepUndated = fenceBound.isDefined && plainBound.isEmpty
+    new SriScan(SriSource.store(pages, headers, minModified), requiredSchema,
+      minModified, keepUndated, pushedDeletedOnly)
+  }
 }
 
 class SriScan(store: PageStore, required: StructType,
-              minModified: Option[Long], deletedOnly: Boolean)
+              minModified: Option[Long], keepUndated: Boolean,
+              deletedOnly: Boolean)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"SriScan PushedFilters: [minModified=$minModified, " +
-      s"deletedOnly=$deletedOnly], ReadSchema: ${required.simpleString}"
+      s"keepUndated=$keepUndated, deletedOnly=$deletedOnly], " +
+      s"ReadSchema: ${required.simpleString}"
 
   /** One partition per page — the Spark-native answer to the reference's
     * sequential next-link walk + prefetch: all pages read concurrently.
     * Bodies the store already downloaded while enumerating ride along in
-    * their partition (no second fetch). */
-  override def planInputPartitions(): Array[InputPartition] =
+    * their partition (no second fetch).
+    *
+    * Walked once per scan: Spark asks every new `BatchScanExec` for its
+    * partitions, and one query builds several for the same scan (the
+    * planner, each physical rule that copies the node, each AQE
+    * re-plan after a stage completes). */
+  @transient private lazy val partitions: Array[InputPartition] =
     store.listPages()
       .map(p => SriInputPartition(p, store.cachedBody(p)): InputPartition)
       .toArray
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SriReaderFactory(store, required.fieldNames, minModified, deletedOnly)
+    new SriReaderFactory(store, required.fieldNames, minModified, keepUndated,
+      deletedOnly)
 }
 
 case class SriInputPartition(page: String, body: Option[String] = None)
   extends InputPartition
 
 class SriReaderFactory(store: PageStore, columns: Array[String],
-                       minModified: Option[Long], deletedOnly: Boolean)
+                       minModified: Option[Long], keepUndated: Boolean,
+                       deletedOnly: Boolean)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[SriInputPartition]
     new SriPageReader(store, part.page, part.body, columns, minModified,
-      deletedOnly)
+      keepUndated, deletedOnly)
   }
 }
 
 /** Parses one page (envelope or plain array), normalizes to rows, applies
   * pushed predicates at parse time. */
 class SriPageReader(store: PageStore, page: String, body: Option[String],
-                    columns: Array[String],
-                    minModified: Option[Long], deletedOnly: Boolean)
+                    columns: Array[String], minModified: Option[Long],
+                    keepUndated: Boolean, deletedOnly: Boolean)
     extends PartitionReader[InternalRow] {
 
   private val mapper = new ObjectMapper()
@@ -210,8 +250,8 @@ class SriPageReader(store: PageStore, page: String, body: Option[String],
         if (deleted) "deleted"
         else if (meta == null) null else meta.path("type").asText(null)
       val keep =
-        (minModified.isEmpty || (modified != null &&
-          modified.longValue >= minModified.get)) &&
+        minModified.forall(m =>
+          if (modified == null) keepUndated else modified.longValue >= m) &&
         (!deletedOnly || rtype == "deleted")
       if (keep) {
         val key =

@@ -141,6 +141,10 @@ final class PushListener(source: EventSource,
   val reconnects = new AtomicLong(0)
   val unroutedEvents = new AtomicLong(0)
   @volatile private var thread: Thread = _
+  // guards `handling` and the interrupt in stop(): a running handler (a
+  // sync) must never see the interrupt meant for a parked poll or sleep
+  private val handlerLock = new Object
+  private var handling = false
 
   def start(): Unit = {
     require(running.compareAndSet(false, true), "listener already running")
@@ -155,8 +159,10 @@ final class PushListener(source: EventSource,
     if (t != null) {
       // a loop parked in sleep(reconnectMs) or a blocking poll must not
       // pin shutdown for a full cadence: the InterruptedException lands
-      // in the loop's catch, which clears `running` and exits
-      t.interrupt()
+      // in the loop's catch, which clears `running` and exits. An
+      // in-flight handler is left to finish within the join timeout; the
+      // loop exits after it because `running` is already false
+      handlerLock.synchronized(if (!handling) t.interrupt())
       t.join(10000L)
     }
     source.close()
@@ -215,12 +221,18 @@ final class PushListener(source: EventSource,
     rooms.get(path) match {
       case None => unroutedEvents.incrementAndGet(); ()
       case Some(handler) =>
-        try { handler(event.copy(path = path)); syncsRun.incrementAndGet(); () }
-        catch {
+        // once stopped, start no handler: stop() may already have
+        // interrupted this thread, which would fail the sync
+        val go = handlerLock.synchronized {
+          handling = running.get(); handling
+        }
+        if (go) try {
+          handler(event.copy(path = path)); syncsRun.incrementAndGet(); ()
+        } catch {
           case e: Throwable =>
             syncFailures.incrementAndGet()
             pendingRetry.add(event.copy(path = path) -> (nowMs() + retryMs)); ()
-        }
+        } finally handlerLock.synchronized { handling = false }
     }
 
   private def dueInMs(): Option[Long] = {

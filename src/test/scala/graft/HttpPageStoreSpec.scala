@@ -99,6 +99,31 @@ class HttpPageStoreSpec extends AnyFunSuite {
       Seq("/a?f=x&limit=500&offset=0"))
   }
 
+  test("modifiedSince URL builder: separator, millis format, cold start, " +
+    "no bound, a bound already in the URL") {
+    import HttpPageStore.withModifiedSince
+    assert(withModifiedSince("https://h/a", None) === "https://h/a")
+    assert(withModifiedSince("https://h/a", Some(0L)) ===
+      "https://h/a?modifiedSince=1970-01-01T00:00:00.000Z")
+    assert(withModifiedSince("https://h/a?limit=2", Some(1705795200123L)) ===
+      "https://h/a?limit=2&modifiedSince=2024-01-21T00:00:00.123Z")
+    assert(withModifiedSince("https://h/a?limit=2&$$meta.deleted=any",
+      Some(graft.ops.Watermark.ColdStartMs)) ===
+      "https://h/a?limit=2&$$meta.deleted=any&modifiedSince=1900-01-01T00:00:00.000Z")
+    // a bound already in the URL: the later of the two is sent, once
+    assert(withModifiedSince(
+      "https://h/a?modifiedSince=2024-02-01T00:00:00Z&limit=2",
+      Some(1705795200000L)) ===
+      "https://h/a?limit=2&modifiedSince=2024-02-01T00:00:00.000Z")
+    assert(withModifiedSince(
+      "https://h/a?modifiedSince=2024-01-01T00%3A00%3A00.000Z",
+      Some(1705795200000L)) ===
+      "https://h/a?modifiedSince=2024-01-21T00:00:00.000Z")
+    val e = intercept[IllegalArgumentException](
+      withModifiedSince("https://h/a?modifiedSince=yesterday", Some(0L)))
+    assert(e.getMessage.contains("https://h/a?modifiedSince=yesterday"))
+  }
+
   test("api.headers arrive on the wire (loopback HttpServer capture)") {
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)

@@ -107,6 +107,17 @@ class MergeSpec extends SparkSuite {
     assert(Watermark.readState(spark, tmp, "nope", SyncType.Full).isEmpty)
   }
 
+  test("state parked at .bak by a crash mid-writeState is read back, " +
+    "not a cold start") {
+    val tmp = java.nio.file.Files.createTempDirectory("wm").toString + "/state"
+    Watermark.writeState(spark, tmp, "t1", SyncType.Delta, SyncState(42L, 7L))
+    // the crash window: live state parked at .bak, new state not yet in place
+    assert(new java.io.File(tmp).renameTo(new java.io.File(tmp + ".bak")))
+    assert(Watermark.readState(spark, tmp, "t1", SyncType.Delta)
+      .contains(SyncState(42L, 7L)))
+    assert(new java.io.File(tmp).exists() && !new java.io.File(tmp + ".bak").exists())
+  }
+
   test("diff operators: changed/new/missing row sets are disjoint and complete") {
     val target = sri.where(col("modified_ms") < cut)
     val staged = Dedup.keepLatest(sri.where(col("modified_ms") >= cut))

@@ -116,6 +116,28 @@ class PushListenerSpec extends SparkSuite {
     } finally listener.stop()
   }
 
+  test("stop() during a running sync lets it finish instead of failing it") {
+    val src = new QueueEventSource
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val listener = new PushListener(src,
+      rooms = Map("/slow" -> (_ => { entered.countDown(); release.await() })),
+      reconnectMs = 5L, retryMs = 5L, sleep = _ => ())
+    listener.start()
+    src.publish(PushEvent("/slow"))
+    assert(entered.await(15, java.util.concurrent.TimeUnit.SECONDS))
+    // stop() joins the listener thread, so it runs on its own thread while
+    // this one releases the handler
+    val stopper = new Thread(() => listener.stop())
+    stopper.start()
+    Thread.sleep(200) // stop() has cleared `running` and is joining
+    release.countDown()
+    stopper.join(15000L)
+    assert(!stopper.isAlive)
+    assert(listener.syncsRun.get() === 1)
+    assert(listener.syncFailures.get() === 0)
+  }
+
   test("unrouted events are counted, not fatal") {
     val src = new QueueEventSource
     val listener = new PushListener(src, rooms = Map.empty,

@@ -30,6 +30,88 @@ class SriSourceSpec extends SparkSuite {
     dir
   }
 
+  /** The fixture plus an undated tombstone (no `$$meta.modified`). */
+  private def writePagesUndatedTomb(): String = {
+    val dir = writePages()
+    Files.writeString(Paths.get(s"$dir/page3.json"),
+      """[{"key": "6", "$$meta": {"permalink": "/a/6", "type": "A",
+        |   "deleted": true}}]""".stripMargin)
+    dir
+  }
+
+  private val jan21 = 1705795200000L
+
+  private def tombHrefs(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.where(col("resourcetype") === "deleted").select("href").collect()
+      .map(_.getString(0)).sorted.toSeq
+
+  /** The scan node's description (pushed bound, undated-row handling). */
+  private def scanOf(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
+
+  private def postScanFilters(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FilterExec => f.condition.sql
+    }.mkString(" ; ")
+
+  test("tombstone fence alone is pushed and keeps the undated tombstone") {
+    val src = spark.read.format("sri").option("pages", writePagesUndatedTomb())
+      .load()
+    val fenced = src.where(col("modified_ms") >= jan21 ||
+      col("modified_ms").isNull)
+    assert(tombHrefs(fenced) === Seq("/a/5", "/a/6"))
+    assert(scanOf(fenced).contains(s"minModified=Some($jan21)"))
+    assert(scanOf(fenced).contains("keepUndated=true"))
+    assert(!postScanFilters(fenced).contains("modified_ms"))
+  }
+
+  test("tombstone fence in either operand order is pushed") {
+    val src = spark.read.format("sri").option("pages", writePagesUndatedTomb())
+      .load()
+    val flipped = src.where(col("modified_ms").isNull ||
+      col("modified_ms") > jan21 - 1)
+    assert(tombHrefs(flipped) === Seq("/a/5", "/a/6"))
+    assert(scanOf(flipped).contains(s"minModified=Some($jan21)"))
+    assert(!postScanFilters(flipped).contains("modified_ms"))
+  }
+
+  test("tombstone fence conjoined with a plain bound drops undated rows; " +
+    "the tighter bound wins") {
+    val src = spark.read.format("sri").option("pages", writePagesUndatedTomb())
+      .load()
+    val both = src.where(col("modified_ms") >= jan21 ||
+        col("modified_ms").isNull)
+      .where(col("modified_ms") >= 1704067200000L) // 2024-01-01, looser
+    assert(tombHrefs(both) === Seq("/a/5"))
+    assert(scanOf(both).contains(s"minModified=Some($jan21)"))
+    assert(scanOf(both).contains("keepUndated=false"))
+    // the plain bound tighter than the fence
+    val tighter = src.where(col("modified_ms") >= 1704067200000L ||
+        col("modified_ms").isNull)
+      .where(col("modified_ms") >= jan21)
+    assert(tighter.select("href").collect().map(_.getString(0)).sorted.toSeq ===
+      Seq("/a/2", "/a/5"))
+  }
+
+  test("unsupported OR shapes stay post-scan") {
+    val src = spark.read.format("sri").option("pages", writePagesUndatedTomb())
+      .load()
+    val otherCol = src.where(col("modified_ms") >= jan21 ||
+      col("jsondata").isNull)
+    val otherOp = src.where(col("modified_ms") >= jan21 ||
+      col("resourcetype") === "deleted")
+    Seq(otherCol, otherOp).foreach { df =>
+      assert(scanOf(df).contains("minModified=None"))
+      assert(postScanFilters(df).contains("modified_ms"))
+    }
+    // /a/3, /a/4 (href-only) have null jsondata; /a/6 is undated but
+    // deleted: each shape keeps exactly what its predicate says
+    assert(otherCol.select("href").collect().map(_.getString(0)).sorted.toSeq ===
+      Seq("/a/2", "/a/3", "/a/4", "/a/5"))
+    assert(otherOp.select("href").collect().map(_.getString(0)).sorted.toSeq ===
+      Seq("/a/2", "/a/5", "/a/6"))
+  }
+
   test("reads all three envelope shapes; one partition per page") {
     val df = spark.read.format("sri").option("pages", writePages()).load()
     assert(df.rdd.getNumPartitions === 3)
