@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   * into BENCH_FULL.json as a top-level "isolated" map; `--one <query>`
   * = the child the isolated mode spawns. A sweep PRESERVES a previously
   * spliced isolated map (it re-splices it into the new artifact); only
-  * a new `--isolated` run replaces the floors.
+  * a new `--isolated` run replaces the floors. `--profile <query>
+  * [sfDir]` = per-Spark-job breakdown of one query (see [[runProfile]]).
   */
 object Bench {
 
@@ -89,35 +90,39 @@ object Bench {
     case "--one" :: name :: Nil => runOne(name)
     case "--isolated" :: Nil => runIsolated(".*")
     case "--isolated" :: regex :: Nil => runIsolated(regex)
+    case "--profile" :: name :: Nil => runProfile(name, envConfig()._1)
+    case "--profile" :: name :: sfDir :: Nil => runProfile(name, sfDir)
     case Nil => runSweep()
-    case bad =>
-      // a typo'd flag must NOT fall through to the multi-minute sweep
-      // (which would overwrite BENCH_FULL.json and drop any spliced
-      // isolated floors) — fail loudly instead
-      System.err.println(s"[bench] unrecognized args: ${bad.mkString(" ")}" +
-        " — expected nothing, '--one <query>', or '--isolated [regex]'")
-      sys.exit(2)
+    case _ => usage(args)
   }
 
-  /** SF dir + CPU count shared by the sweep and the isolated children —
-    * one resolution point so a child never silently runs against a
-    * different corpus/parallelism than the sweep it is spliced next to. */
-  private def envConfig(): (String, String) = (
+  // a typo'd flag must NOT fall through to the multi-minute sweep (which
+  // would overwrite BENCH_FULL.json and drop any spliced isolated
+  // floors) — fail loudly instead
+  private def usage(args: Array[String]): Nothing = {
+    System.err.println(s"[bench] unrecognized args: ${args.mkString(" ")}" +
+      " — expected nothing, '--one <query>', '--isolated [regex]' or" +
+      " '--profile <query> [sfDir]'")
+    sys.exit(2)
+  }
+
+  /** SF dir + CPU count shared by the sweep, the isolated children, the
+    * profiler and `ExplainDump --queries` — one resolution point so a
+    * child never silently runs against a different corpus/parallelism
+    * than the sweep it is spliced next to. */
+  private[graft] def envConfig(): (String, Int) = (
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-    sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString))
+    LocalSession.defaultCpus)
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** A declared query by name, validated BEFORE the session build and
+    * the multi-table warmup: a typo'd name must fail in milliseconds,
+    * not after minutes of warmup with a bare NoSuchElementException. */
+  private def queryOrExit(flag: String, name: String)
+  : (SparkSession, String) => org.apache.spark.sql.DataFrame =
+    SparkEntry.queries.getOrElse(name, {
+      System.err.println(s"[bench] $flag: unknown query '$name'")
+      sys.exit(2)
+    })
 
   private def r3(v: Double): String =
     if (v < 0) "-1"
@@ -143,15 +148,9 @@ object Bench {
     * is that NOTHING from the other 300 queries (JIT state, code cache,
     * broadcast cleanup backlog, heap fragmentation) is resident. */
   private def runOne(name: String): Unit = {
-    // validate BEFORE session build + multi-table warmup: a typo'd
-    // `--one` name must fail in milliseconds, not after minutes of
-    // warmup with a bare NoSuchElementException (ADVICE r13)
-    val fn = SparkEntry.queries.getOrElse(name, {
-      System.err.println(s"[bench] --one: unknown query '$name'")
-      sys.exit(2)
-    })
+    val fn = queryOrExit("--one", name)
     val (sfDir, cpus) = envConfig()
-    val spark = buildSession(cpus)
+    val spark = LocalSession(cpus)
     warmup(spark, sfDir)
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3).max(1)
     val first = runOnce(spark, sfDir, name, fn)
@@ -160,6 +159,88 @@ object Bench {
       else first +: Vector.fill(runs - 1)(runOnce(spark, sfDir, name, fn))
     val ok = times.filter(_ >= 0)
     println(s"""{"query":"$name","median":${r3(medianOf(times))},"min":${r3(if (ok.isEmpty) -1 else ok.min)},"runs":[${times.map(r3).mkString(",")}]}""")
+    spark.stop()
+  }
+
+  /** Profiler mode (`--profile <query> [sfDir]`): the sweep's session
+    * and warmup, then `SPARK_GRAFT_PROFILE_RUNS` (default 1) runs of one
+    * query, printing per Spark job the wall time, stage and task
+    * counts, task-time sum and shuffle volume — the breakdown that
+    * tells scheduling overhead apart from task work — plus each
+    * streaming micro-batch's `durationMs` map. Extra SQL confs for A/B
+    * runs: `SPARK_GRAFT_PROFILE_CONF="k=v;k=v"` (`spark.conf.set`, so
+    * runtime SQL confs only). */
+  private def runProfile(name: String, sfDir: String): Unit = {
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val fn = queryOrExit("--profile", name)
+    val spark = LocalSession()
+    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(';')
+      .filter(_.contains('=')).foreach { kv =>
+        val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
+      })
+    warmup(spark, sfDir)
+
+    // id -> [submitMs, endMs, stages, tasks, taskMs, shufRead, shufWrite]
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
+    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.put(e.jobId, Array(e.time, 0L, e.stageIds.size.toLong, 0L, 0L, 0L, 0L))
+        e.stageIds.foreach(s => stageToJob.put(s, e.jobId))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        val a = jobs.get(e.jobId); if (a != null) a(1) = e.time
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val a = jobs.get(stageToJob.get(e.stageId))
+        if (a != null && e.taskMetrics != null) a.synchronized {
+          a(3) += 1
+          a(4) += e.taskMetrics.executorRunTime
+          a(5) += e.taskMetrics.shuffleReadMetrics.totalBytesRead
+          a(6) += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // streaming-side breakdown: per-microbatch durationMs map (trigger
+    // execution, addBatch, state commit, WAL commits…) — where the
+    // wall − job-wall gap of the stream_* queries actually goes
+    spark.streams.addListener(
+      new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit =
+          println(s"[stream] started ${e.name}")
+        override def onQueryProgress(e: QueryProgressEvent): Unit = {
+          val d = e.progress.durationMs.asScala.toSeq.sortBy(-_._2)
+            .map { case (k, v) => s"$k=$v" }.mkString(" ")
+          println(s"[stream] batch ${e.progress.batchId}: $d")
+        }
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+          println(s"[stream] terminated")
+      })
+    val runs = sys.env.get("SPARK_GRAFT_PROFILE_RUNS").map(_.toInt).getOrElse(1)
+    for (r <- 0 until runs) { // repeat to separate first-run codegen/JIT cost
+      jobs.clear(); stageToJob.clear()
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      val wall = (System.nanoTime() - t0) / 1e9
+      spark.sparkContext.removeSparkListener(listener)
+      Thread.sleep(300) // let queued listener events drain
+      spark.sparkContext.addSparkListener(listener)
+      val rows = jobs.asScala.toSeq.sortBy(_._1)
+      println(f"== $name run $r: wall $wall%.2f s, jobs ${rows.size}, " +
+        f"job-wall sum ${rows.map(j => j._2(1) - j._2(0)).sum / 1000.0}%.2f s, " +
+        f"task-time sum ${rows.map(_._2(4)).sum / 1000.0}%.2f s")
+      rows.foreach { case (id, a) =>
+        println(f"job $id%4d wall ${(a(1) - a(0)) / 1000.0}%7.2f s  " +
+          f"stages ${a(2)}%3d tasks ${a(3)}%5d " +
+          f"taskTime ${a(4) / 1000.0}%8.2f s " +
+          f"shufR ${a(5) / 1048576.0}%8.1f MB shufW ${a(6) / 1048576.0}%8.1f MB")
+      }
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+    }
     spark.stop()
   }
 
@@ -325,8 +406,8 @@ object Bench {
   }
 
   private def runSweep(): Unit = {
-    val (sfDir, cpus) = envConfig()
-    val spark = buildSession(cpus)
+    val (sfDir, nThreads) = envConfig()
+    val spark = LocalSession(nThreads)
     warmup(spark, sfDir)
 
     // a failed query reports -1, never its time-to-throw (a regression
@@ -339,7 +420,6 @@ object Bench {
     // asked for. SPARK_GRAFT_BENCH_RUNS overrides N for local iteration;
     // SPARK_GRAFT_BENCH_ONLY=<regex> restricts the query set.
     // load sentinel, first leg (after warmup so JIT is settled)
-    val nThreads = cpus.toInt
     val sweepT0 = System.nanoTime()
     def atSec: Double = (System.nanoTime() - sweepT0) / 1e9
     // probe timeline: (queries completed, seconds since sweep start,
@@ -469,7 +549,7 @@ object Bench {
       "\"" + k + "\":{\"orig\":" + r3(orig) + ",\"retry\":" + r3(rm) + ",\"probe\":" + r3(p) + "}"
     }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","nruns":$runs,"load_factor":${r3(loadFactor)},"load_cal":{"before":${r3(calBefore)},"after":${r3(calAfter)},"threads":$cpus},"load_probes":$probesJson,"retried":$retriedJson,"queries":$full,"detailed":$runsJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","nruns":$runs,"load_factor":${r3(loadFactor)},"load_cal":{"before":${r3(calBefore)},"after":${r3(calAfter)},"threads":$nThreads},"load_probes":$probesJson,"retried":$retriedJson,"queries":$full,"detailed":$runsJson,"sf":"$sfDir"}"""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_FULL.json")
     try {
       // carry forward the previous artifact's spliced isolated floors —

@@ -1,12 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** Dumps `explain("formatted")` for the headline queries into EXPLAIN.md —
   * the plan-shape evidence behind PlanSpec's assertions, kept as a
   * reviewable artifact. Regenerate with:
   *
   *   sbt "runMain graft.ExplainDump /root/testdata/sf0.001 EXPLAIN.md"
+  *
+  * Per-query mode: `sbt "runMain graft.ExplainDump --queries <outDir>
+  * <suffix> <query>..."` writes `<outDir>/<query>_<suffix>.txt`, the
+  * before/after plan evidence under `plans/`. It uses Bench's SF dir
+  * and session, so the dumped INITIAL plan is the one the bench
+  * executes; AQE's runtime re-optimizations (broadcast promotions,
+  * partition coalescing) happen below the AdaptiveSparkPlan node and
+  * are not visible in a pre-execution dump.
   */
 object ExplainDump {
 
@@ -437,16 +445,46 @@ object ExplainDump {
         "build exists to enable.")
   )
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = args.toList match {
+    case "--queries" :: outDir :: suffix :: names if names.nonEmpty =>
+      queryPlans(outDir, suffix, names)
+    case rest if rest.size <= 2 && !rest.exists(_.startsWith("--")) =>
+      headlinePlans(args)
+    case _ =>
+      System.err.println("usage: ExplainDump [sfDir] [out.md] | " +
+        "ExplainDump --queries <outDir> <suffix> <query>...")
+      sys.exit(2)
+  }
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      // binary literals (the embedded bloom sketch) hex-dump to 100s of
+      // KB in plan text; elide them — the shape, not the bits, matters
+      .replaceAll("0x[0-9A-F]{64}[0-9A-F]*", "0x<binary literal elided>")
+
+  private def queryPlans(outDir: String, suffix: String,
+                         names: Seq[String]): Unit = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val (sfDir, cpus) = Bench.envConfig()
+    val spark = LocalSession(cpus)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    names.foreach { name =>
+      val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
+      java.nio.file.Files.write(p,
+        formatted(SparkEntry.queries(name)(spark, sfDir)).getBytes("UTF-8"))
+      println(s"[explain] wrote $p")
+    }
+    spark.stop()
+  }
+
+  /** The EXPLAIN.md plans, on a fixed `local[4]` so the partition counts
+    * in the committed plans do not depend on the machine. */
+  private def headlinePlans(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("EXPLAIN.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4)
 
     val sb = new StringBuilder
     sb ++= "# EXPLAIN — headline query plans (generated by graft.ExplainDump)\n\n"
@@ -474,8 +512,7 @@ object ExplainDump {
     // the louvain fixture's per-round plans run INSIDE the gated loop
     // (the graded wrapper's own plan is just the final compose join) —
     // rebuild one attempted round at the real pinned leaves
-    def louvainRoundFrames(): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) = {
+    def louvainRoundFrames(): (DataFrame, DataFrame) = {
       import org.apache.spark.sql.functions._
       import ops.Pin.PinOps
       val cust = Tables.customer(spark, sfDir)
@@ -501,7 +538,7 @@ object ExplainDump {
       val assign = ops.Pin.resetStats(ops.Graph.moveFromLabeled(
         identityLab, nodes.select(col("node"), col("node").as("comm")),
         deg, wTot, capInMigration = true))
-      def label(b: org.apache.spark.sql.DataFrame) = x
+      def label(b: DataFrame) = x
         .join(b.select(col("node").as("lo"), col("comm").as("cl")),
           Seq("lo"))
         .join(b.select(col("node").as("hi"), col("comm").as("ch")),
@@ -521,8 +558,7 @@ object ExplainDump {
     lazy val louvainFrames = louvainRoundFrames()
     // one forward level + one backward step of graph_betweenness at
     // unpinned leaves (same rationale as the louvain round frames)
-    def betweennessLevelFrames(): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) = {
+    def betweennessLevelFrames(): (DataFrame, DataFrame) = {
       import org.apache.spark.sql.functions._
       val edges = ops.Graph.cooccurTopK(
         Tables.lineitem(spark, sfDir), "l_orderkey", "l_suppkey", k = 5)
@@ -542,7 +578,7 @@ object ExplainDump {
       (fwd, bwd)
     }
     lazy val bcFrames = betweennessLevelFrames()
-    val overrides: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
+    val overrides: Map[String, () => DataFrame] = Map(
       "graph_louvain_round" -> (() => louvainFrames._1),
       "graph_louvain_score" -> (() => louvainFrames._2),
       "graph_betweenness_fwd" -> (() => bcFrames._1),
@@ -560,12 +596,7 @@ object ExplainDump {
     headliners.foreach { case (name, why) =>
       val df = overrides.get(name).map(_.apply())
         .getOrElse(SparkEntry.queries(name)(spark, sfDir))
-      val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        // binary literals (the embedded bloom sketch) hex-dump to 100s of
-        // KB in plan text; elide them — the shape, not the bits, matters
-        .replaceAll("0x[0-9A-F]{64}[0-9A-F]*", "0x<binary literal elided>")
-      sb ++= s"\n## $name\n\n$why\n\n```\n$plan```\n"
+      sb ++= s"\n## $name\n\n$why\n\n```\n${formatted(df)}```\n"
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       sb.toString.getBytes("UTF-8"))

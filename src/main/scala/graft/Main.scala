@@ -19,15 +19,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
-    val cpus = opts.getOrElse("cpus", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sync")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(opts.get("cpus").map(_.toInt).getOrElse(4))
     try {
       if (opts.contains("listen")) {
         val listener = runListen(spark, opts)

@@ -1,16 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Merge}
 
-/** Scale probe (not part of the driver contract): synthesize a target and
-  * delta far larger than the test fixtures and run the full delta-merge
-  * plan, printing row counts and wall time. Demonstrates the merge algebra
-  * at row counts where a driver-side or O(n²) implementation would fail.
+/** Scale probe, a developer tool: synthesize inputs far larger than the
+  * test fixtures and time an operator path at row counts where a
+  * driver-side or O(n²) implementation would fail. The default mode is
+  * the delta-merge probe; four more modes follow it:
   *
   *   sbt "runMain graft.ScaleProbe 20000000 2000000"          # merge
-  *   sbt "runMain graft.ScaleProbe minhash 500000"            # dedup path
+  *   sbt "runMain graft.ScaleProbe synth <srcSfDir> <outDir> 10"
+  *   sbt "runMain graft.ScaleProbe stream 5000000 1000000"
+  *   sbt "runMain graft.ScaleProbe louvain <sfDir> [noaqe]"
+  *   sbt "runMain graft.ScaleProbe decide 100000"
+  *
+  * The session comes from [[LocalSession]] (`SPARK_GRAFT_CPUS` cores).
+  * README "Measured scale probes" lists the findings of earlier probe
+  * modes, whose source stays in git at `fdeffa9`.
   */
 object ScaleProbe {
   /** Per-phase timing of the graded Louvain fixture — where do the
@@ -22,15 +28,8 @@ object ScaleProbe {
   private def louvainProbe(args: Array[String]): Unit = {
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val aqe = !args.contains("noaqe")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
+    spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
     // warm codegen/parquet paths so the probe times the loop, not JIT
     spark.range(1000000).selectExpr("sum(id)").collect()
     val t00 = System.nanoTime()
@@ -130,100 +129,6 @@ object ScaleProbe {
     spark.stop()
   }
 
-  /** Decade probe for the r12 two-phase in-migration cap on the exact
-    * shape it exists for: a star graph where EVERY spoke proposes into
-    * the hub's community in round 1. The old
-    * `row_number over partitionBy(c)` sorted all n proposals in ONE
-    * task (data-sized straggler); the salted two-phase bounds every
-    * sort at ~n/64 and must scale near-linearly from n to 4n spokes.
-    *   sbt "runMain graft.ScaleProbe hubcap [spokes]"
-    */
-  private def hubCapProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(2000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def run(sz: Long): (Double, Long) = {
-      // star: hub 0 — (0, i) canonical, weight 1
-      val e = spark.range(1, sz + 1)
-        .select(lit(0L).as("lo"), col("id").as("hi"), lit(1L).as("w"))
-        .localCheckpoint()
-      val b = spark.range(0, sz + 1)
-        .select(col("id").as("node"), col("id").as("comm"))
-        .localCheckpoint()
-      val t0 = System.nanoTime()
-      val moved = ops.Graph.louvainMoveRoundWeighted(e, b,
-          capInMigration = true)
-        .where(col("node") =!= col("comm")).count()
-      ((System.nanoTime() - t0) / 1e9, moved)
-    }
-    run(10000) // warm codegen so the n point is not charged JIT
-    val (w1, m1) = run(n)
-    val (w4, m4) = run(n * 4)
-    println(f"[hubcap] n=$n%d wall=$w1%.1fs moved=$m1%d | 4x " +
-      f"wall=$w4%.1fs (${w4 / w1}%.1fx) moved=$m4%d")
-    // every spoke proposes into the hub; the swap guard forbids the
-    // singleton hub moving into a LARGER-id singleton, so the hub
-    // stays and the cap admits exactly n_c(hub) = 1 spoke
-    require(m1 == 1 && m4 == 1,
-      s"hub cap must admit exactly 1 in-migrant, got $m1 / $m4")
-    require(w4 / w1 < 8.0,
-      f"4x hub proposals cost ${w4 / w1}%.1fx wall — the cap has a " +
-        "data-sized straggler again")
-    spark.stop()
-  }
-
-  /** Decade probe for the round-8 batch-4/5 iterative graph ops: walk
-    * corpus generation and Borůvka contraction on a synthetic bounded-
-    * degree graph (the top-k-association shape both are documented to
-    * run on) at n and 4n vertices. Both are per-round join+aggregate
-    * algebra, so wall should scale near-linearly in edges. */
-  private def walkMstProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(300000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def edges(sz: Long) = spark.range(2, sz)
-      .select(col("id").as("src"),
-        explode(array((1 to 5).map(k =>
-          pmod(col("id") * (2 * k + 1) + k * 7919, lit(sz - 2)) + 2): _*))
-          .as("dst"))
-      .where(col("dst") =!= col("src"))
-      .withColumn("w", pmod(col("src") * 31 + col("dst") * 17, lit(1000L)))
-    def run(sz: Long): (Double, Double) = {
-      val e = edges(sz).localCheckpoint()
-      val t0 = System.nanoTime()
-      ops.Graph.deterministicWalks(e, "src", "dst", steps = 4)
-        .agg(count(lit(1))).collect()
-      val wWalk = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      ops.Graph.boruvkaMaxForest(e, "src", "dst", "w", rounds = 3)
-        .agg(count(lit(1))).collect()
-      val wMst = (System.nanoTime() - t1) / 1e9
-      (wWalk, wMst)
-    }
-    val (a1, m1) = run(n)
-    val (a4, m4) = run(n * 4)
-    println(f"[walkmst] n=$n%d walk=$a1%.1fs mst=$m1%.1fs | 4x " +
-      f"walk=$a4%.1fs (${a4 / a1}%.1fx) mst=$m4%.1fs (${m4 / m1}%.1fx)")
-    require(a4 / a1 < 8.0 && m4 / m1 < 8.0,
-      f"4x data cost walk ${a4 / a1}%.1fx / mst ${m4 / m1}%.1fx wall " +
-        "— superlinear scaling")
-    spark.stop()
-  }
-
   /** Decade probe for the round-8 batch-7/8 operators: prefix-filtered
     * Jaccard join over a synthetic dup-class corpus, weighted SSSP and
     * per-source harmonic closeness on the bounded-degree synthetic
@@ -237,15 +142,7 @@ object ScaleProbe {
     * 4x data -> 3.3x / 1.1x / 1.4x / 1.4x wall. */
   private def decideProbe(args: Array[String]): Unit = {
     val n = args.drop(1).headOption.map(_.toLong).getOrElse(100000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // corpus: 20% of docs sit in near-dup pairs (partner differs in one
     // token), the rest unique; 40 tokens/doc over a vocabulary that
     // grows with n (the Heaps-law regime prefix filtering relies on).
@@ -315,44 +212,26 @@ object ScaleProbe {
     spark.stop()
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("decide")) { decideProbe(args); return }
-    if (args.headOption.contains("louvain")) { louvainProbe(args); return }
-    if (args.headOption.contains("hubcap")) { hubCapProbe(args); return }
-    if (args.headOption.contains("walkmst")) { walkMstProbe(args); return }
-    if (args.headOption.contains("minhash")) { minhashProbe(args); return }
-    if (args.headOption.contains("cc")) { ccProbe(args); return }
-    if (args.headOption.contains("ccstar")) { ccStarProbe(args); return }
-    if (args.headOption.contains("synth")) { synthScale(args); return }
-    if (args.headOption.contains("budget")) { budgetProbe(args); return }
-    if (args.headOption.contains("skew")) { skewProbe(args); return }
-    if (args.headOption.contains("skewaqe")) { skewAqeProbe(args); return }
-    if (args.headOption.contains("substr")) { substrProbe(args); return }
-    if (args.headOption.contains("fuzzy")) { fuzzyProbe(args); return }
-    if (args.headOption.contains("quant")) { quantProbe(args); return }
-    if (args.headOption.contains("nnd")) { nndProbe(args); return }
-    if (args.headOption.contains("stream")) { streamProbe(args); return }
-    if (args.headOption.contains("longdoc")) { longdocProbe(args); return }
-    if (args.headOption.contains("pack")) { packProbe(args); return }
-    if (args.headOption.contains("hh")) { hhProbe(args); return }
-    if (args.headOption.contains("asof")) { asofProbe(args); return }
-    if (args.headOption.contains("inccc")) { incCcProbe(args); return }
-    if (args.headOption.contains("pagerank")) { pagerankProbe(args); return }
-    if (args.headOption.contains("pagerankconv")) {
-      pagerankConvProbe(args); return }
-    if (args.headOption.contains("kmeans")) { kmeansProbe(args); return }
-    if (args.headOption.contains("tri")) { triangleProbe(args); return }
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("synth") => synthScale(args)
+    case Some("stream") => streamProbe(args)
+    case Some("louvain") => louvainProbe(args)
+    case Some("decide") => decideProbe(args)
+    case rows if rows.forall(_.toLongOption.isDefined) => mergeProbe(args)
+    case _ =>
+      System.err.println(s"[scaleprobe] unknown mode '${args.head}' — usage: " +
+        "ScaleProbe [targetRows [deltaRows]] | synth [srcDir [outDir " +
+        "[copies]]] | stream [targetRows [deltaRows]] | louvain [sfDir " +
+        "[noaqe]] | decide [n]")
+      sys.exit(2)
+  }
+
+  /** The default mode: synthesize a `targetRows` target and a
+    * `deltaRows` delta and time the full delta-merge plan. */
+  private def mergeProbe(args: Array[String]): Unit = {
     val targetRows = args.headOption.map(_.toLong).getOrElse(20000000L)
     val deltaRows = args.drop(1).headOption.map(_.toLong).getOrElse(2000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     def synth(n: Long, offset: Long, modBase: Long) =
       spark.range(n).select(
@@ -378,253 +257,6 @@ object ScaleProbe {
     spark.stop()
   }
 
-  /** MinHash+LSH dedup pipeline over synthetic docs: every 10th doc is an
-    * exact duplicate of its predecessor, so expected candidate pairs are
-    * known and recall is checkable at any scale. */
-  private def minhashProbe(args: Array[String]): Unit = {
-    val nDocs = args.drop(1).headOption.map(_.toLong).getOrElse(500000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // groups of 10 ids share one text (dense exact dups). Vocabulary must
-    // be LARGE: a low-entropy corpus (tiny shingle space) makes MinHash
-    // sketches collide across unrelated docs and the candidate join
-    // degenerates quadratically — true of any LSH dedup; real pipelines
-    // frequency-filter boilerplate shingles for the same reason.
-    // Materialize to parquet first (in the real pipeline text is a stored
-    // column; as a live generator expression Catalyst re-inlines the
-    // 30-term builder under every shingle-transform element).
-    val gen = spark.range(nDocs).select(
-      col("id").as("doc_id"),
-      concat_ws(" ", (0 until 30).map(k =>
-        concat(lit("w"),
-          pmod(expr("id div 10 * 10") * (k + 7) + k * k * 31, lit(99991)))): _*)
-        .as("text"))
-    val path = java.nio.file.Files.createTempDirectory("probe").toString + "/docs"
-    gen.repartition(cpus.toInt * 2).write.mode("overwrite").parquet(path)
-    // (a single small parquet file = one input split = serial execution;
-    // production inputs split via spark.sql.files.maxPartitionBytes)
-    val docs = spark.read.parquet(path)
-    val t0 = System.nanoTime()
-    val signed = ops.DedupText.minhashSignatures(docs, "doc_id", "text")
-    val pairs = ops.DedupText.lshCandidates(signed, "doc_id", 8, 4).count()
-    val secs = (System.nanoTime() - t0) / 1e9
-    println(f"minhash docs=$nDocs%d candidate_pairs=$pairs%d " +
-      f"wall=${secs}%.1fs throughput=${nDocs / secs}%.0f docs/s")
-    spark.stop()
-  }
-
-  /** Long-document regression pin for the higher-order text operators:
-    * the sf fixtures average ~10² tokens/doc, far too short to expose an
-    * accidental O(m²) (a subexpression inlined into a lambda re-evaluates
-    * per array element — the bug class TextOps.bind exists to prevent).
-    * This probe runs CDC chunking + shingle extraction over documents of
-    * `tokens` length; doubling --tokens should ~double wall time, not 4×.
-    *
-    *   sbt "runMain graft.ScaleProbe longdoc 20000 4000"  # docs, tokens
-    */
-  private def longdocProbe(args: Array[String]): Unit = {
-    val nDocs = args.drop(1).headOption.map(_.toLong).getOrElse(20000L)
-    val nTok = args.drop(2).headOption.map(_.toInt).getOrElse(4000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expr.GraftFunctions.register(spark)
-    // per-doc-distinct words so shingle/chunk work can't collapse
-    val docs = spark.range(nDocs).repartition(cpus.toInt)
-      .select(col("id").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(1), lit(nTok)),
-          i => concat(lit("w"), pmod(col("id") * 31 + i * 7, lit(9973)))))
-          .as("text"))
-      .localCheckpoint() // charge synthesis once, not per measured op
-    def time(tag: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = body
-      println(f"$tag%-12s rows=$n%d wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
-    }
-    time("cdc_chunks") {
-      docs.select(explode(graft.ops.TextOps.cdcChunks(col("text")))).count()
-    }
-    time("shingles") {
-      docs.select(explode(graft.ops.TextOps.shingles(col("text"), 3))).count()
-    }
-    time("chunk_fixed") {
-      docs.select(explode(
-        graft.ops.TextOps.chunkTokens(col("text"), 512, 64))).count()
-    }
-    spark.stop()
-  }
-
-  /** Hot-key demonstration: one key owns 40% of a big fact table. With
-    * broadcast and AQE skew-join disabled (the 100 TB worst case: dim too
-    * big to broadcast, skew inside one post-shuffle partition), a plain
-    * sort-merge join serializes on the hot key's reducer; Skew.saltedJoin
-    * spreads it over `salts` reducers. Prints both wall times and checks
-    * the row counts agree. */
-  private def skewProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(20000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val nKeys = 100000L
-    val big = spark.range(n).select(
-      when(col("id") % 5 < 2, 0L).otherwise(col("id") % nKeys).as("key"),
-      (col("id") * 17 % 1000).as("v")).localCheckpoint()
-    val small = spark.range(nKeys)
-      .select(col("id").as("key"), (col("id") % 97).as("w")).localCheckpoint()
-    def timed(label: String)(f: => Long): Long = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[skewprobe] $label%-8s ${(System.nanoTime() - t0) / 1e9}%.1fs " +
-        f"($r%d rows)")
-      r
-    }
-    val plain = timed("plain")(
-      big.join(small, Seq("key")).select(col("v") + col("w")).count())
-    val salted = timed("salted")(
-      graft.ops.Skew.saltedJoin(big, small, "key", salts = cpus.toInt)
-        .select(col("v") + col("w")).count())
-    require(plain == salted, s"salted join changed cardinality: $plain vs $salted")
-    spark.stop()
-  }
-
-  /** Decade probe for the exact-substring span pipeline (the worst sf1
-    * scaler, 5.5× for 10× data): three corpus volumes (1×/3×/10×) with a
-    * KNOWN planted duplicate structure, so candidate-pair mass is
-    * predictable and the maxDf fence's effect is checkable, not argued.
-    *
-    * Corpus shape per doc: a 24-token preamble IDENTICAL across the whole
-    * corpus (boilerplate — every window inside it has df = nDocs and must
-    * be fenced, else the self-join is quadratic), unique filler, and a
-    * 15-token run shared by its group of 3 docs (df = 3: survives the
-    * fence; 8 shared windows × 3 pairs = 24 hit rows per group). So the
-    * TRUE candidate mass is exactly linear in the duplicated volume, and
-    * the probe asserts the pipeline tracks it: span rows scale exactly
-    * with docs, and wall time stays sub-quadratic.
-    *
-    *   sbt "runMain graft.ScaleProbe substr 30000"   # 30k/90k/300k docs
-    */
-  private def substrProbe(args: Array[String]): Unit = {
-    val base = args.drop(1).headOption.map(_.toLong).getOrElse(30000L)
-    require(base % 3 == 0, "base doc count must be divisible by 3 (groups)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // warmup
-    val results = Seq(1L, 3L, 10L).map { scale =>
-      val n = base * scale
-      // text synthesized then MATERIALIZED (live generator expressions
-      // re-inline the builder under the window transform — same pitfall
-      // minhashProbe documents)
-      val preamble = (0 until 24).map(i => s"bp$i").mkString(" ")
-      val docs = spark.range(n).select(
-          col("id").as("doc_id"),
-          concat_ws(" ",
-            lit(preamble),
-            concat_ws(" ", (0 until 30).map(j =>
-              concat(lit(s"u${j}_"), col("id"))): _*),
-            concat_ws(" ", (0 until 15).map(k =>
-              concat(lit(s"p${k}_"), expr("id div 3"))): _*),
-            concat_ws(" ", (30 until 60).map(j =>
-              concat(lit(s"u${j}_"), col("id"))): _*)).as("text"))
-        .repartition(cpus.toInt * 2)
-        .localCheckpoint()
-      val t0 = System.nanoTime()
-      val spans = ops.DedupText.substringSpans(docs, "doc_id", "text",
-        w = 8, minWindows = 1, maxDf = 64)
-      val rows = spans.count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      // every group of 3 contributes 3 unordered pairs × 1 maximal span
-      val expected = (n / 3) * 3
-      println(f"[substrprobe] docs=$n%d span_rows=$rows%d " +
-        f"expected=$expected%d wall=$secs%.1fs " +
-        f"per_doc_ms=${secs * 1000 / n}%.3f")
-      require(rows == expected,
-        s"span rows $rows != $expected — fence or island agg broke")
-      (n, secs)
-    }
-    val (n1, t1) = results.head
-    val (n10, t10) = results.last
-    val blowup = (t10 / t1) / (n10.toDouble / n1)
-    println(f"[substrprobe] 10x data -> ${t10 / t1}%.1fx wall " +
-      f"(normalized ${blowup}%.2f; > 1.5 would mean super-linear)")
-    require(blowup < 1.5,
-      f"substring pipeline went super-linear: ${blowup}%.2f")
-    spark.stop()
-  }
-
-  /** Stage timing for the dd_fuzzy_verified pipeline (fence → signatures
-    * → LSH → verify → CC), each stage materialized separately so wall
-    * time attributes to the right stage.
-    *   sbt "runMain graft.ScaleProbe fuzzy /root/testdata/sf0.1"  */
-  private def fuzzyProbe(args: Array[String]): Unit = {
-    val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[fuzzyprobe] $label%-12s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    timed("warmup")(spark.range(1000000).selectExpr("sum(id)").collect())
-    val docs = timed("docs")(graft.queries.PipelineQueries
-      .docsWithDups(spark, sfDir).localCheckpoint())
-    // the explode+pin is the fence's floor: time it alone so the fence
-    // line attributes (hot detection + isEmpty) separately
-    timed("explode_pin")(
-      ops.Par.fanOut(docs, col("doc_id")).select(col("doc_id"),
-          explode(ops.TextOps.shingles(col("text"), 3)).as("s"))
-        .localCheckpoint().unpersist(blocking = false))
-    val shAll = timed("fence")(
-      ops.DedupText.shinglesFiltered(docs, "doc_id", "text", 3, 0.5))
-    val signed = timed("signatures")(
-      ops.DedupText.signaturesFromShingles(shAll, "doc_id", 32)
-        .localCheckpoint())
-    val cand = timed("lsh_pairs")(
-      ops.DedupText.lshCandidatesExact(signed, "doc_id", 8, 4)
-        .localCheckpoint())
-    val verified = timed("verify")(
-      ops.DedupText.pairShingleOverlapFrom(shAll, "doc_id", cand)
-        .where(col("i") * 3 >= col("u") * 2).select("a_id", "b_id")
-        .localCheckpoint())
-    timed("cc")(
-      ops.Cluster.connectedComponents(docs.select("doc_id"), "doc_id",
-        verified, "a_id", "b_id", edgesCovered = true).count())
-    spark.stop()
-  }
-
   /** Streaming delta-merge throughput: a pre-seeded parquet target and a
     * multi-file delta (updates + inserts + tombstones + in-batch
     * duplicates) drained through `StreamingSync.deltaMergeStream` under
@@ -639,15 +271,7 @@ object ScaleProbe {
   private def streamProbe(args: Array[String]): Unit = {
     val targetRows = args.drop(1).headOption.map(_.toLong).getOrElse(5000000L)
     val deltaRows = args.drop(2).headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import org.apache.spark.sql.functions._
     val base = java.nio.file.Files.createTempDirectory("streamprobe").toString
     def synth(n: Long, offset: Long, modBase: Long) =
@@ -669,7 +293,7 @@ object ScaleProbe {
           lit(1900000000000L).as("modified_ms"),
           lit(null).cast("string").as("jsondata"),
           lit(true).as("deleted")))
-      .repartition(cpus.toInt)
+      .repartition(spark.sparkContext.defaultParallelism)
       .write.mode("overwrite").parquet(s"$base/in")
     def drain(): Double = {
       val stream = spark.readStream
@@ -698,322 +322,6 @@ object ScaleProbe {
     spark.stop()
   }
 
-  /** Decade probe for the NN-descent kNN-graph path (sim_nn_descent):
-    * the claim under grade is that seed + one refinement round scale
-    * LINEARLY in N when the seed bucket count scales with N (per-bucket
-    * occupancy held constant — the production knob), where the brute
-    * kNN graph (sim_knn_graph's baseline) is N². Synthesizes `small`×
-    * and `big`× rotated-replica corpora (the quantProbe scheme), runs
-    * init+round at each size with planes chosen to hold ~N/2^planes
-    * constant, and requires the measured wall ratio to stay within 2×
-    * of the size ratio — a quadratic stage would read ~(big/small)².
-    *
-    *   sbt "runMain graft.ScaleProbe nnd /root/testdata/sf0.1 4 16"
-    */
-  private def nndProbe(args: Array[String]): Unit = {
-    val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val small = args.drop(2).headOption.map(_.toInt).getOrElse(4)
-    val big = args.drop(3).headOption.map(_.toInt).getOrElse(16)
-    require(big % small == 0 && big > small, s"bad sizes $small/$big")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    val src = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    def corpus(copies: Int) = (0 until copies).map { k =>
-      val rot = (k * 7) % 64
-      val emb = if (rot == 0) col("embedding")
-        else concat(slice(col("embedding"), rot + 1, 64 - rot),
-          slice(col("embedding"), 1, rot))
-      src.select((col("vec_id") + k * 1000000L).as("vec_id"),
-        emb.as("embedding"))
-    }.reduce(_ unionByName _)
-    def lap[T](what: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[nnd] $what%-22s ${s}%8.2f s")
-      (r, s)
-    }
-    def planesFor(n: Long): Int = { // hold ~125 vectors per bucket
-      var p = 1
-      while ((n >> p) > 125 && p < 16) p += 1
-      p
-    }
-    val walls = Seq(small, big).map { c =>
-      val sk = ops.Similarity.quantizeInt8(corpus(c)).localCheckpoint()
-      val n = sk.count()
-      val p = planesFor(n)
-      println(s"[nnd] copies=$c n=$n planes=$p buckets=${1 << p}")
-      val (init, wInit) = lap(s"init x$c")(
-        ops.Similarity.nnDescentInit(sk, 5, p).localCheckpoint())
-      val (_, wRound) = lap(s"round x$c")(
-        ops.Similarity.nnDescentRound(sk, init, 5).count())
-      (n, wInit + wRound)
-    }
-    val sizeRatio = walls(1)._1.toDouble / walls(0)._1
-    val wallRatio = walls(1)._2 / walls(0)._2
-    println(f"[nnd] size ${sizeRatio}%.1fx -> wall ${wallRatio}%.2fx " +
-      f"(quadratic would be ${sizeRatio * sizeRatio}%.0fx)")
-    require(wallRatio < sizeRatio * 2.0,
-      f"[nnd] super-linear scaling: $wallRatio%.2fx wall for " +
-        f"$sizeRatio%.1fx data")
-    spark.stop()
-  }
-
-  /** Stored-sketch amortization probe for int8-quantized ANN: the graded
-    * query quantizes per invocation (and measures ~1.2× the float
-    * baseline); production stores the sketch column once and scans it
-    * forever. This probe materializes both representations to parquet at
-    * 10× the sf0.1 corpus, reports their sizes, and times repeated
-    * top-k queries against each stored form — the regime where the 4×
-    * narrower scan and integer dot actually pay.
-    *
-    *   sbt "runMain graft.ScaleProbe quant /root/testdata/sf0.1 10 5"
-    */
-  private def quantProbe(args: Array[String]): Unit = {
-    val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val rounds = args.drop(3).headOption.map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("quant").toString
-    // 10× corpus: vec_id-shifted replicas with a per-copy dimension
-    // rotation (same scheme as ScaleProbe synth) so ANN structure stays
-    // organic instead of 10-way clones
-    val src = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val corpus = (0 until copies).map { k =>
-      val rot = (k * 7) % 64
-      val emb = if (rot == 0) col("embedding")
-        else concat(slice(col("embedding"), rot + 1, 64 - rot),
-          slice(col("embedding"), 1, rot))
-      src.select((col("vec_id") + k * 1000000L).as("vec_id"),
-        emb.as("embedding"))
-    }.reduce(_ unionByName _)
-    corpus.write.mode("overwrite").parquet(s"$base/float")
-    ops.Similarity.quantizeInt8(corpus)
-      // int8 domain fits in a byte — store the narrow form, widen on read
-      .select(col("vec_id"),
-        col("q_emb").cast("array<byte>").as("q_emb_i8"), col("q_norm"))
-      .write.mode("overwrite").parquet(s"$base/int8")
-    def dirSize(p: String): Long = {
-      import scala.jdk.CollectionConverters._
-      import scala.util.Using
-      Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(p))) {
-        w => w.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-      }
-    }
-    val (szF, szQ) = (dirSize(s"$base/float"), dirSize(s"$base/int8"))
-    println(f"[quantprobe] stored bytes: float=$szF%d int8=$szQ%d " +
-      f"ratio=${szF.toDouble / szQ}%.2f")
-    graft.expr.GraftFunctions.register(spark)
-    val ll = graft.expr.GraftFunctions.dot_ll _
-    def topkFloat(): Long = {
-      val c = spark.read.parquet(s"$base/float")
-      ops.Similarity.bruteForceTopK(
-        c, c.where(col("vec_id") % 997 === 0), 5).count()
-    }
-    def topkInt8(): Long = {
-      import org.apache.spark.sql.expressions.Window
-      val c = spark.read.parquet(s"$base/int8")
-        .select(col("vec_id"), col("q_emb_i8").cast("array<long>").as("q_emb"),
-          col("q_norm"))
-      val q = c.where(col("vec_id") % 997 === 0)
-        .select(col("vec_id").as("query_id"), col("q_emb").as("q_q"),
-          col("q_norm").as("q_n"))
-      val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          ll(col("q_q"), col("q_emb")).as("qdot"),
-          col("q_n").as("qna"), col("q_norm").as("qnb"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy((col("qdot").cast("double") /
-          (sqrt(col("qna").cast("double")) * sqrt(col("qnb").cast("double"))))
-          .desc, col("neighbor_id").asc)
-      scored.withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= 5).count()
-    }
-    def timedRounds(label: String)(f: () => Long): Double = {
-      f() // warm
-      val times = (1 to rounds).map { _ =>
-        val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      val med = times(times.size / 2)
-      println(f"[quantprobe] $label%-6s median=${med}%.2fs over $rounds rounds")
-      med
-    }
-    val tF = timedRounds("float")(() => topkFloat())
-    val tQ = timedRounds("int8")(() => topkInt8())
-    println(f"[quantprobe] corpus=${copies}x stored-sketch speedup: " +
-      f"${tF / tQ}%.2fx (bytes ${szF.toDouble / szQ}%.2fx)")
-    spark.stop()
-  }
-
-  /** AQE-vs-salting honesty check: the SAME hot-key fixture as
-    * [[skewProbe]], but with AQE's skew-join handling ENABLED (thresholds
-    * lowered so the local-mode partition sizes trip it, as they would at
-    * production scale) — measuring when Spark's native runtime re-plan
-    * makes manual salting unnecessary. Prints plain-under-AQE vs salted
-    * wall; see Skew.scala's scaladoc for the recorded crossover.
-    *
-    *   sbt "runMain graft.ScaleProbe skewaqe 20000000"
-    */
-  private def skewAqeProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(20000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // local-mode partitions are far under the 256MB default; scale the
-      // trigger down so the probe exercises the same code path a 100 TB
-      // run trips at the default
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val nKeys = 100000L
-    val big = spark.range(n).select(
-      when(col("id") % 5 < 2, 0L).otherwise(col("id") % nKeys).as("key"),
-      (col("id") * 17 % 1000).as("v")).localCheckpoint()
-    val small = spark.range(nKeys)
-      .select(col("id").as("key"), (col("id") % 97).as("w")).localCheckpoint()
-    def timed(label: String)(f: => Long): Double = {
-      val t0 = System.nanoTime()
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"[skewaqe] $label%-10s $secs%.1fs ($r%d rows)")
-      secs
-    }
-    // collect on the aggregated frame so ITS queryExecution is the one
-    // that ran — the post-AQE plan then shows whether the skew split
-    // actually fired (honesty requirement: "AQE didn't help" is only a
-    // finding if the skew handler demonstrably triggered)
-    val aggAqe = big.join(small, Seq("key"))
-      .agg(sum(col("v") + col("w")).as("s"), count(lit(1)).as("n"))
-    val tAqe = timed("plain+aqe") { aggAqe.collect().head.getLong(1) }
-    val planMarks = aggAqe.queryExecution.executedPlan.toString
-      .linesIterator.filter(_.toLowerCase.contains("skew")).take(4).toSeq
-    println(s"[skewaqe] skew-split markers in executed plan: " +
-      (if (planMarks.isEmpty) "NONE (skew handler did not fire)"
-       else planMarks.mkString(" | ").trim))
-    val tSalt = timed("salted")(
-      graft.ops.Skew.saltedJoin(big, small, "key", salts = cpus.toInt)
-        .select(col("v") + col("w")).count())
-    println(f"[skewaqe] n=$n aqe=${tAqe}%.1fs salted=${tSalt}%.1fs " +
-      f"ratio=${tSalt / tAqe}%.2f (see Skew.scala scaladoc)")
-    spark.stop()
-  }
-
-  /** Stage timing for the dd_cluster_cc pipeline over a real sf dir:
-    * signatures → LSH pairs → connected-components loop, each materialized
-    * separately so the wall time attributes to the right stage. */
-  private def ccProbe(args: Array[String]): Unit = {
-    val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[ccprobe] $label%-12s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    timed("warmup")(spark.range(1000000).selectExpr("sum(id)").collect())
-    val docs = graft.queries.PipelineQueries
-      .docsWithDups(spark, sfDir).localCheckpoint()
-    timed("docs")(docs.count())
-    val signed = timed("signatures")(
-      ops.DedupText.minhashSignaturesExact(docs, "doc_id", "text")
-        .localCheckpoint())
-    val pairs = timed("lsh_pairs")(
-      ops.DedupText.lshCandidatesExact(signed, "doc_id", 8, 4)
-        .localCheckpoint())
-    timed("cc_loop")(
-      ops.Cluster.connectedComponents(docs.select("doc_id"), "doc_id",
-        pairs, "a_id", "b_id").count())
-    spark.stop()
-  }
-
-  /** Stage-timing replay of the graded `inc_cc_delta` query — where does
-    * the delta fold's wall go? Each stage prints its own time so the
-    * base-rebuild cost (inherent to the graded shape) separates from the
-    * recurring delta-fold cost (what production re-pays per batch). */
-  private def incCcProbe(args: Array[String]): Unit = {
-    val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[inccc] $label%-14s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    timed("warmup")(spark.range(1000000).selectExpr("sum(id)").collect())
-    for (round <- 1 to 2) {
-      println(s"[inccc] --- round $round ---")
-      val docs = graft.queries.PipelineQueries.docsWithDups(spark, sfDir)
-      val isDelta = col("doc_id") % 7 === 0
-      val shAll = timed("shingles_ckpt")(
-        ops.Par.fanOut(docs, col("doc_id")).select(col("doc_id"),
-            explode(ops.TextOps.shingles(col("text"), 3)).as("s"))
-          .localCheckpoint())
-      val baseSig = timed("base_sig_ckpt")(
-        ops.DedupText.signaturesFromShingles(
-          shAll.where(!isDelta), "doc_id").localCheckpoint())
-      val basePairs = ops.DedupText.lshCandidatesExact(baseSig, "doc_id", 8, 4)
-      val baseCC = timed("base_cc")(
-        ops.Cluster.connectedComponents(
-          docs.where(!isDelta).select("doc_id"),
-          "doc_id", basePairs, "a_id", "b_id", edgesCovered = true))
-      val deltaSig = ops.DedupText.signaturesFromShingles(
-        shAll.where(isDelta), "doc_id")
-      val deltaPairs = timed("delta_pairs")(
-        ops.DedupText.lshCandidatesDelta(baseSig, deltaSig,
-          "doc_id", 8, 4))
-      val folded = timed("apply_edges")(
-        ops.Cluster.applyEdges(baseCC, deltaPairs, "a_id", "b_id",
-          docs.where(isDelta).select("doc_id"), "doc_id",
-          edgesCovered = true))
-      timed("final_count")(folded.count())
-    }
-    spark.stop()
-  }
-
   /** Synthesize a larger scale point from an existing sf dir by unioning
     * `copies` key-shifted replicas: `sbt "runMain graft.ScaleProbe synth
     * /root/testdata/sf0.1 /tmp/sf1 10"`. Referential integrity is
@@ -1031,15 +339,7 @@ object ScaleProbe {
     val src = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(2).headOption.getOrElse("/tmp/sf1")
     val copies = args.drop(3).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import org.apache.spark.sql.DataFrame
     // Per-copy KEYED ALPHABET PERMUTATION (letters→letters,
     // digits→digits so tokenization shape is preserved). The previous
@@ -1145,421 +445,6 @@ object ScaleProbe {
         .withColumn("embedding", emb)
         .withColumn("label", col("label") + k * 1000)
     })
-    spark.stop()
-  }
-
-  /** Adversarial-topology CC probe: a sorted PATH graph — the worst case
-    * for per-hop label propagation (diameter = n) and the shape the
-    * two-phase star fallback exists for. `sbt "runMain graft.ScaleProbe
-    * ccstar 1000000"`: builds an n-vertex path, runs the hybrid
-    * connectedComponents, and asserts (a) one component labeled by the
-    * min id, (b) the star phase converged in O(log n) rounds — NOT
-    * O(n/5) propagation rounds. */
-  /** PageRank decade probe: synthesize a deterministic power-law-ish
-    * graph (each vertex v links to v/2 and to 7 pseudo-random targets,
-    * so in-degree concentrates on low ids like real link graphs), run
-    * the fixed-iteration integer PageRank, and check (a) wall time
-    * scales ~linearly in edges across a 4× decade step, (b) the integer
-    * mass-conservation deficit stays inside the truncation bound that
-    * Round8Spec pins at toy size — at ANY size, because the bound is
-    * per-edge/per-vertex, not per-graph.
-    *
-    *   sbt "runMain graft.ScaleProbe pagerank 1000000"   # vertices
-    */
-  /** Decade probe for the CONVERGENCE-TERMINATED PageRank
-    * (`pageRankIntConverged`): same synthetic power-law-ish graph as
-    * [[pagerankProbe]], eps = 1% of scale (the contraction factor is
-    * 0.85/round, so ~2 decades of delta ≈ 28 rounds — a realistic
-    * production tolerance that keeps the probe minutes, not hours).
-    * Checks (a) the ROUND COUNT is size-invariant (convergence depth
-    * depends on the contraction factor, not the vertex count — the
-    * property that makes the loop safe at 100 TB), and (b) wall time
-    * across a 4× decade step scales ~linearly in edges.
-    *
-    *   sbt "runMain graft.ScaleProbe pagerankconv 300000"   # vertices
-    */
-  private def pagerankConvProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(300000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val eps = 10000000000L // 1% of the default 1e12 scale
-    def run(sz: Long): (Long, Int, Double) = {
-      val v = spark.range(2, sz).select(col("id"))
-      val edges = v.select(col("id").as("src"),
-          explode(array(greatest((col("id") / 2).cast("long"), lit(2L)) +:
-            (1 to 7).map(k => pmod(col("id") * (2 * k + 1) + k * 7919,
-              lit(sz - 2)) + 2): _*)).as("dst"))
-        .where(col("dst") =!= col("src"))
-      val t0 = System.nanoTime()
-      val (pr, rounds) = ops.Graph.pageRankIntConverged(
-        edges, "src", "dst", eps = eps, maxIters = 60)
-      val nodes = pr.count()
-      (nodes, rounds, (System.nanoTime() - t0) / 1e9)
-    }
-    val (n1, r1, w1) = run(n)
-    val (n4, r4, w4) = run(n * 4)
-    println(f"[pagerankconv] n=$n1%d rounds=$r1%d wall=$w1%.1fs | " +
-      f"4x n=$n4%d rounds=$r4%d wall=$w4%.1fs ratio=${w4 / w1}%.1fx")
-    require(math.abs(r4 - r1) <= 2,
-      s"round count varied with size: $r1 vs $r4 — convergence depth " +
-        "must track the contraction factor, not the graph size")
-    require(w4 / w1 < 8.0,
-      f"4x data cost ${w4 / w1}%.1fx wall — superlinear scaling")
-    spark.stop()
-  }
-
-  private def pagerankProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(1000000L)
-    val iters = 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def run(sz: Long): (Long, Long, Double) = {
-      val v = spark.range(2, sz).select(col("id"))
-      // clamp the halving edge to >= 2 so every dst is also a src —
-      // no dangling vertices, which keeps the truncation-only deficit
-      // bound applicable (dangling mass is DROPPED by design and would
-      // dominate the deficit otherwise)
-      val edges = v.select(col("id").as("src"),
-          explode(array(greatest((col("id") / 2).cast("long"), lit(2L)) +:
-            (1 to 7).map(k => pmod(col("id") * (2 * k + 1) + k * 7919,
-              lit(sz - 2)) + 2): _*)).as("dst"))
-        .where(col("dst") =!= col("src"))
-      val t0 = System.nanoTime()
-      val pr = ops.Graph.pageRankInt(edges, "src", "dst", iters = iters)
-        .localCheckpoint()
-      val total = pr.agg(sum("pr")).head.getLong(0)
-      val nodes = pr.count()
-      (nodes, total, (System.nanoTime() - t0) / 1e9)
-    }
-    val (n1, t1, w1) = run(n)
-    val (n4, t4, w4) = run(n * 4)
-    val scale = 1000000000000L
-    println(f"[pagerank] n=$n1%d wall=$w1%.1fs | 4x n=$n4%d wall=$w4%.1fs " +
-      f"ratio=${w4 / w1}%.1fx")
-    // deficit bound: iters · (E + N) units of 1/scale (Round8Spec's
-    // recurrence) — E ≈ 8·N here
-    Seq((n1, t1), (n4, t4)).foreach { case (nn, tt) =>
-      val bound = iters.toLong * (9 * nn + 1)
-      require(tt <= nn * scale && tt >= nn * scale - bound,
-        s"mass deficit ${nn * scale - tt} outside bound $bound at n=$nn")
-    }
-    require(w4 / w1 < 8.0,
-      f"4x data cost ${w4 / w1}%.1fx wall — superlinear scaling")
-    spark.stop()
-  }
-
-  /** Decade point for codebook training + PQ encoding: synthetic int8
-    * sketches at n and 4n vectors, k-means (k=16, 2 rounds) and PQ
-    * (m=8, ksub=16, 1 round) + encode. Per-round cost is one corpus
-    * scan × broadcast codebook + a partial-aggregated update, so wall
-    * must stay near-linear in the corpus. */
-  private def kmeansProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(200000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expr.GraftFunctions.register(spark)
-    val ll = graft.expr.GraftFunctions.dot_ll _
-    def sketch(sz: Long) = spark.range(sz)
-      .select(col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(63)), j =>
-          pmod(col("id") * (j + 13) + j * lit(7919), lit(255)) - 127)
-          .as("q_emb"))
-      .withColumn("q_norm", ll(col("q_emb"), col("q_emb")))
-    def run(sz: Long): (Double, Double) = {
-      val sk = sketch(sz).localCheckpoint()
-      val t0 = System.nanoTime()
-      val km = ops.Similarity.kmeansInt8(sk, k = 16, iters = 2)
-      km.assign.groupBy("cell").count().collect()
-      val wKm = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val pq = ops.Similarity.pqTrainInt8(sk, m = 8, ksub = 16,
-        iters = 1)
-      pq.codes.groupBy("sub", "code").count().collect()
-      val wPq = (System.nanoTime() - t1) / 1e9
-      (wKm, wPq)
-    }
-    val (km1, pq1) = run(n)
-    val (km4, pq4) = run(n * 4)
-    println(f"[kmeans] n=$n%d km=$km1%.1fs pq=$pq1%.1fs | 4x " +
-      f"km=$km4%.1fs (${km4 / km1}%.1fx) pq=$pq4%.1fs (${pq4 / pq1}%.1fx)")
-    require(km4 / km1 < 8.0 && pq4 / pq1 < 8.0,
-      f"4x data cost km ${km4 / km1}%.1fx / pq ${pq4 / pq1}%.1fx wall " +
-        "— superlinear scaling")
-    spark.stop()
-  }
-
-  /** Decade point for triangle counting + k-core: the pagerank probe's
-    * constant-out-degree synthetic graph (wedge space Σ outdeg² grows
-    * linearly when degrees are bounded — the degree-ordered orientation
-    * keeps it that way even with hubs). */
-  private def triangleProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(300000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def edges(sz: Long) = spark.range(2, sz)
-      .select(col("id").as("src"),
-        explode(array(greatest((col("id") / 2).cast("long"), lit(2L)) +:
-          (1 to 7).map(k => pmod(col("id") * (2 * k + 1) + k * 7919,
-            lit(sz - 2)) + 2): _*)).as("dst"))
-      .where(col("dst") =!= col("src"))
-    def run(sz: Long): (Long, Double, Double) = {
-      val e = edges(sz).localCheckpoint()
-      val t0 = System.nanoTime()
-      val nTri = ops.Graph.triangleCounts(e, "src", "dst")
-        .agg(sum("n_tri")).head.getLong(0) / 3
-      val wTri = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      ops.Graph.kCore(e, "src", "dst", k = 8, rounds = 3)
-        .agg(count(lit(1))).collect()
-      val wCore = (System.nanoTime() - t1) / 1e9
-      (nTri, wTri, wCore)
-    }
-    val (t1c, w1, c1) = run(n)
-    val (t4c, w4, c4) = run(n * 4)
-    println(f"[tri] n=$n%d triangles=$t1c%d tri=$w1%.1fs core=$c1%.1fs " +
-      f"| 4x triangles=$t4c%d tri=$w4%.1fs (${w4 / w1}%.1fx) " +
-      f"core=$c4%.1fs (${c4 / c1}%.1fx)")
-    require(w4 / w1 < 8.0 && c4 / c1 < 8.0,
-      f"4x data cost tri ${w4 / w1}%.1fx / core ${c4 / c1}%.1fx wall " +
-        "— superlinear scaling")
-    spark.stop()
-  }
-
-  private def ccStarProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val verts = spark.range(1, n + 1).select(col("id"))
-    val edges = spark.range(1, n)
-      .select(col("id").as("a"), (col("id") + 1).as("b"))
-    val t0 = System.nanoTime()
-    val labels = ops.Cluster.connectedComponents(verts, "id", edges, "a", "b",
-      edgesCovered = true)
-    val distinctLabels = labels.select("cluster").distinct().count()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val rounds = ops.Cluster.lastStarRounds
-    val lg = (math.log(n.toDouble) / math.log(2)).ceil.toInt
-    println(f"[ccstar] n=$n%d components=$distinctLabels%d " +
-      f"starRounds=$rounds%d (log2=$lg) wall=$secs%.1fs")
-    require(distinctLabels == 1L, s"path graph split into $distinctLabels")
-    require(rounds > 0 && rounds <= 2 * lg,
-      s"star rounds $rounds not O(log n) for n=$n")
-    spark.stop()
-  }
-
-  /** Budgeted-selection probe: `sbt "runMain graft.ScaleProbe budget
-    * 20000000"` — 20M rows, coarse integer scores (0..999), budget = half
-    * the total cost. Compares Sampling.tokenBudget (histogram pre-pass +
-    * marginal-class window) against the naive global-window cumsum (ONE
-    * task sorts everything) on wall clock, and asserts identical
-    * selections. */
-  private def budgetProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(20000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[budgetprobe] $label%-10s ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      r
-    }
-    val rows = spark.range(n).select(col("id"),
-        pmod(xxhash64(col("id")), lit(1000L)).as("score"),
-        (pmod(xxhash64(col("id"), lit(1L)), lit(900L)) + 100L).as("cost"))
-      .localCheckpoint()
-    val budget = rows.agg(sum("cost")).head.getLong(0) / 2
-    val fastIds = timed("histogram")(
-      graft.ops.Sampling.tokenBudget(rows, "score", "cost", "id", budget)
-        .select("id").localCheckpoint())
-    val nFast = fastIds.count()
-    val naiveIds = timed("global_win")(rows
-      .withColumn("__cum", sum(col("cost")).over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("id").asc)
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)))
-      .where(col("__cum") <= budget)
-      .select("id").localCheckpoint())
-    val nNaive = naiveIds.count()
-    // identical SELECTIONS, not just identical counts: a same-cost row
-    // swapped across the cutoff must fail this, so compare id sets
-    val diff = fastIds.join(naiveIds, Seq("id"), "left_anti").count() +
-      naiveIds.join(fastIds, Seq("id"), "left_anti").count()
-    println(s"[budgetprobe] n=$n budget=$budget " +
-      s"fast=$nFast naive=$nNaive idDiff=$diff")
-    require(nFast == nNaive && diff == 0L,
-      "histogram path must select exactly the global-cumsum id set")
-    spark.stop()
-  }
-
-  /** Sequence packing over synthetic metadata far past the fixtures:
-    * `sbt "runMain graft.ScaleProbe pack 20000000 2000"` = 20M docs across
-    * 2000 sources. Chunked packing is pure window math (scales like a
-    * scan); greedy packing streams each sorted partition with O(1) state —
-    * neither materializes a group. */
-  private def packProbe(args: Array[String]): Unit = {
-    val nDocs = args.drop(1).headOption.map(_.toLong).getOrElse(20000000L)
-    val nGroups = args.drop(2).headOption.map(_.toLong).getOrElse(2000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[packprobe] $label%-12s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    timed("warmup")(spark.range(1000000).selectExpr("sum(id)").collect())
-    val docs = spark.range(nDocs).select(
-      concat(lit("src"), col("id") % nGroups).as("g"),
-      col("id").as("id"),
-      (lit(50L) + col("id") % 400L).as("len"))
-    val chunkRows = timed("pack_chunks")(
-      ops.Packing.packChunks(docs, "g", "id", "len", 2048L).count())
-    val greedyRows = timed("pack_greedy")(
-      ops.Packing.greedyPack(docs, "g", "id", "len", 2048L).count())
-    println(s"[packprobe] docs=$nDocs groups=$nGroups " +
-      s"chunk_rows=$chunkRows greedy_rows=$greedyRows")
-    spark.stop()
-  }
-
-  /** Nearest as-of join at volume:
-    * `sbt "runMain graft.ScaleProbe asof 50000000 5000000"` — right side
-    * 50M ticks, left side 5M probes over 100k keys. The union-window
-    * shape means ONE shuffle regardless of direction; wall time scales
-    * with the sort, not with any pairing. */
-  private def asofProbe(args: Array[String]): Unit = {
-    val nRight = args.drop(1).headOption.map(_.toLong).getOrElse(50000000L)
-    val nLeft = args.drop(2).headOption.map(_.toLong).getOrElse(5000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[asofprobe] $label%-10s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    timed("warmup")(spark.range(1000000).selectExpr("sum(id)").collect())
-    val keys = 100000L
-    val right = spark.range(nRight).select(
-      (col("id") % keys).as("k"), (col("id") * 7L % 1000000000L).as("t"),
-      col("id").as("rid"))
-    val left = spark.range(nLeft).select(
-      (col("id") % keys).as("k"), (col("id") * 131L % 1000000000L).as("t"),
-      col("id").as("lid"))
-    val n1 = timed("backward")(
-      ops.AsOf.join(left, right, "k", "t", "lid", "rid").count())
-    val n2 = timed("nearest")(
-      ops.AsOf.joinNearest(left, right, "k", "t", "lid", "rid").count())
-    println(s"[asofprobe] right=$nRight left=$nLeft rows=$n1/$n2")
-    spark.stop()
-  }
-
-  /** Heavy hitters over a synthetic skewed token stream:
-    * `sbt "runMain graft.ScaleProbe hh 100000000"`. Compares the
-    * Misra-Gries + broadcast-recount path against the full
-    * GROUP BY + HAVING in BOTH cardinality regimes:
-    *
-    *  - bounded tail vocabulary (10M distinct): map-side partial
-    *    aggregation already collapses the vocabulary, so the plain
-    *    groupBy wins — measured here so the trade-off is honest;
-    *  - unbounded tail (every row distinct — the n-gram/URL regime):
-    *    partial aggregation collapses nothing, the naive exchange
-    *    carries ~n rows, and Misra-Gries is the only shape whose shuffle
-    *    stays proportional to the candidate set. */
-  private def hhProbe(args: Array[String]): Unit = {
-    val n = args.drop(1).headOption.map(_.toLong).getOrElse(100000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[hhprobe] $label%-12s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    timed("warmup")(spark.range(1000000).selectExpr("sum(id)").collect())
-    // 5 hot terms carry 30% of the stream in both regimes
-    def stream(tail: org.apache.spark.sql.Column) = spark.range(n).select(
-      when(col("id") % 10 < 3, concat(lit("hot"), col("id") % 5))
-        .otherwise(tail).as("w"))
-    def naive(toks: org.apache.spark.sql.DataFrame) = {
-      val total = toks.count()
-      toks.groupBy("w").agg(count(lit(1)).as("cnt"))
-        .where(col("cnt") * 25 > total)
-        .orderBy("w").collect().toSeq
-    }
-    for ((regime, tail) <- Seq(
-        "bounded10M" -> concat(lit("t"), col("id") % 10000000L),
-        "unbounded" -> concat(lit("t"), col("id")))) {
-      val toks = stream(tail)
-      val mg = timed(s"$regime/mg")(
-        ops.Freq.heavyHitters(toks, "w", k = 25).orderBy("w").collect().toSeq)
-      val gb = timed(s"$regime/groupby")(naive(toks))
-      require(mg == gb, s"MG answer diverged in $regime: $mg vs $gb")
-      println(s"[hhprobe] $regime n=$n heavy=${mg.size} (answers identical)")
-    }
     spark.stop()
   }
 }

@@ -341,7 +341,7 @@ object Cluster {
     // (mapped ckpt + touched distinct + singleton anti-join inside
     // connectedComponents) spent three extra jobs of pure fixed overhead
     // on a graph bounded by the delta, measured 1.14 s → 0.6 s warm at
-    // sf0.1 (ScaleProbe inccc).
+    // sf0.1 (README "Measured scale probes", inccc).
     val symMapped = mapped
       .select(explode(array(
         struct(col("cu").as("u"), col("cv").as("v")),

@@ -11,16 +11,17 @@ import graft.ops.Pin.PinOps
   * style count queries). When is that the wrong plan? Spark's groupBy
   * already combines map-side, so with a BOUNDED vocabulary the exchange
   * carries one row per (partition, distinct term) and the plain aggregate
-  * is hard to beat (measured: `ScaleProbe hh`). The regime that breaks it
-  * is UNBOUNDED key cardinality — n-grams, URLs, near-unique tails —
-  * where partial aggregation collapses nothing, the exchange approaches
-  * one row per input token, and the combine hash tables spill. Misra-Gries
-  * summaries fix exactly that regime: each input partition keeps at most
-  * `k-1` counters (one pass, no shuffle), the tiny per-partition candidate
-  * sets union together, and a second pass re-counts ONLY rows matching a
-  * candidate (broadcast hash semi-join, so the shuffle carries just the
-  * heavy keys — 1.9× the naive plan at 100M unique-tail tokens on
-  * local[32], and the gap widens with data volume).
+  * is hard to beat (measured: README "Measured trade-off honesty"). The
+  * regime that breaks it is UNBOUNDED key cardinality — n-grams, URLs,
+  * near-unique tails — where partial aggregation collapses nothing, the
+  * exchange approaches one row per input token, and the combine hash
+  * tables spill. Misra-Gries summaries fix exactly that regime: each
+  * input partition keeps at most `k-1` counters (one pass, no shuffle),
+  * the tiny per-partition candidate sets union together, and a second
+  * pass re-counts ONLY rows matching a candidate (broadcast hash
+  * semi-join, so the shuffle carries just the heavy keys — 1.9× the
+  * naive plan at 100M unique-tail tokens on local[32], and the gap
+  * widens with data volume).
   *
   * Exactness: an item with global count > n/k must exceed the local n_p/k
   * threshold in at least one partition (pigeonhole), so it survives that

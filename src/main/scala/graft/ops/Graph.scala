@@ -1272,8 +1272,8 @@ object Graph {
         // the cap's OUTPUT for that community is itself n_c rows, so
         // the residual single-task work is within a constant factor of
         // the result size, not the proposal count (the hub case goes
-        // O(V) → ≤ SALTS rows; see ScaleProbe hubcap for the measured
-        // 2M→8M-spoke decade point).
+        // O(V) → ≤ SALTS rows; README "Measured scale probes", hubcap,
+        // has the 2M→8M-spoke decade point).
         val nSalts = 64
         val ordGain = Seq(col("gain").desc, col("node").asc)
         prop.join(cs.select(col("c"), col("n_c")), Seq("c"))

@@ -92,13 +92,11 @@ object Pin {
     * data-sized assignment frames this exists for; keep plain
     * [[PinOps.pin]] where real stats should feed broadcast decisions.
     *
-    * The leaf KEEPS the pinned blocks' physical layout
-    * (outputPartitioning/outputOrdering — [[GraftPinShim]], r15): the
-    * old public `createDataFrame(cp.rdd, schema)` round-trip dropped
-    * it, so every same-key consumer of the pinned frame re-exchanged
-    * and re-sorted blocks that were already partitioned and sorted on
-    * that key — one avoidable shuffle per reference per round
-    * (guide §2.4). */
+    * The leaf is rebuilt by `GraftPinShim.dropStats` over the pinned
+    * INTERNAL-row RDD, with no statistics and Unknown layout: the
+    * blocks' outputPartitioning/outputOrdering are NOT kept (see the
+    * coalesced-boundary note at [[apply]]), so a same-key consumer
+    * re-exchanges the pinned frame as it would a stock checkpoint. */
   def resetStats(df: org.apache.spark.sql.DataFrame)
   : org.apache.spark.sql.DataFrame = {
     val cp =

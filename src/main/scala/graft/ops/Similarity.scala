@@ -355,8 +355,8 @@ object Similarity {
     * float baseline at sf0.1) — use [[quantizedTopKOnSketch]] over a
     * persisted [[quantizeInt8]] output for the production regime, where
     * the stored int8 sketch is 3.52× smaller and repeated top-k runs
-    * 1.92× faster than the float column (`ScaleProbe quant`, 10× sf0.1
-    * corpus stored both ways) — the regime a 100 TB corpus lives in,
+    * 1.92× faster than the float column (README "Int8-quantized ANN",
+    * 10× sf0.1 corpus stored both ways) — the regime a 100 TB corpus lives in,
     * where the scan dominates. The graded query `sim_quantized_topk`
     * exercises the stored shape end to end (write sketch → scan → rank). */
   def quantizedTopK(corpus: DataFrame, probes: DataFrame, k: Int)

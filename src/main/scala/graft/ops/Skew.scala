@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   *
   * First line of defense is AQE (`spark.sql.adaptive.skewJoin.enabled`,
   * on by default) — it splits oversized post-shuffle partitions at
-  * runtime. MEASURED crossover (`ScaleProbe skew` / `skewaqe`, 20M rows,
-  * one key owning 40%, local[8], median of repeats):
+  * runtime. MEASURED crossover (README "Skew" and "AQE-vs-salting
+  * honesty check", 20M rows, one key owning 40%, local[8], median of
+  * repeats):
   *
   *   - AQE off, plain SMJ: 6.3–7.0 s (hot key serializes one reducer);
   *     [[saltedJoin]]: 4.8–4.9 s → salting wins ~1.35×.

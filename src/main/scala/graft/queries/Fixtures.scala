@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
+import java.nio.file.Files
 import graft.Tables
 
 /** Shared deterministic fixtures + cross-engine helpers for the graded
@@ -94,4 +96,37 @@ object Fixtures {
     Seq("href", "key", "modified_ms", "jsondata", "resourcetype")
 
   type Q = (SparkSession, String) => DataFrame
+
+  /** Split `df` into `n` slices ordered by `orderCol` (rows sharing an
+    * `orderCol` value move together; slice i holds the i-th ntile of the
+    * distinct values) and write each as a single parquet file
+    * `<prefix>_<i>.parquet` with strictly increasing mtimes — the
+    * replay-order pin of the file-stream drains (stream_mp,
+    * stream_contam). Returns the source dir a file stream reads
+    * oldest-first. Needs at least `n` distinct `orderCol` values; fewer
+    * leaves a slice empty and fails naming it. */
+  private[graft] def writeSlices(df: DataFrame, orderCol: String, n: Int,
+                                 prefix: String): String = {
+    val dir = Files.createTempDirectory(s"${prefix}_src").toString
+    val parts = df.select(orderCol).distinct()
+      .withColumn("__part", ntile(n).over(Window.orderBy(col(orderCol))))
+    // ONE partitioned write instead of n filtered coalesce(1) passes
+    // (guide §1.2): repartition by __part puts each slice value in
+    // exactly one task, so every __part=i directory holds exactly one
+    // file; each is then moved/renamed with the pinned-mtime contract.
+    val tmp = Files.createTempDirectory(s"${prefix}_t").toString
+    df.join(parts, orderCol).repartition(n, col("__part"))
+      .write.partitionBy("__part").mode("overwrite").parquet(tmp)
+    for (i <- 1 to n) {
+      val slice = new java.io.File(tmp, s"__part=$i")
+      require(slice.isDirectory, s"writeSlices: slice $i of $n is empty " +
+        s"(fewer than $n distinct $orderCol values)")
+      val part = slice.listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(dir, f"${prefix}_$i%02d.parquet")
+      Files.move(part.toPath, dst.toPath)
+      assert(dst.setLastModified(1700000000000L + i * 60000L),
+        s"writeSlices: could not pin mtime of $dst")
+    }
+    dir
+  }
 }

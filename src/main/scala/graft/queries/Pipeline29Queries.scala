@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.ops.{Pin, Similarity, TimeSeries}
 import Pin.PinOps
@@ -36,35 +35,6 @@ object Pipeline29Queries {
           datediff(col("o_orderdate").cast("date"),
             to_date(lit("1970-01-01"))), lit(7L)).as("wn"))
       .agg(count(lit(1)).as("x"))
-
-  /** Split `wkly` into `n` calendar slices (whole weeks move together,
-    * so every batch is a per-key calendar SUFFIX of the previous ones)
-    * and write each as a single parquet file with strictly increasing
-    * mtimes — the StreamSplitDrainSpec replay-order pin. Returns the
-    * source dir a file stream reads oldest-first. */
-  private[graft] def writeWeeklySlices(wkly: DataFrame, n: Int)
-  : String = {
-    val dir = java.nio.file.Files.createTempDirectory("smp_src").toString
-    val weekPart = wkly.select("wn").distinct()
-      .withColumn("__part", ntile(n).over(Window.orderBy(col("wn"))))
-    // ONE partitioned write instead of n filtered coalesce(1) passes
-    // (guide §1.2): repartition by __part puts each slice value in
-    // exactly one task, so every __part=i directory holds exactly one
-    // file; each is then moved/renamed with the pinned-mtime contract.
-    // Same rows per slice — downstream folds are order-insensitive.
-    val tmp = java.nio.file.Files.createTempDirectory("smp_t").toString
-    wkly.join(weekPart, "wn").repartition(n, col("__part"))
-      .write.partitionBy("__part").mode("overwrite").parquet(tmp)
-    for (i <- 1 to n) {
-      val part = new java.io.File(tmp, s"__part=$i").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(dir, f"wk_$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L),
-        s"stream_mp: could not pin mtime of $dst")
-    }
-    dir
-  }
 
   val queries: Map[String, Q] = Map(
 
@@ -103,7 +73,10 @@ object Pipeline29Queries {
       // ts_matrix_profile's full-rebuild SQL verbatim. Restart safety
       // (stop after 2 batches, resume from the checkpoint) is pinned in
       // Round26Spec.
-      val srcDir = writeWeeklySlices(weeklyOrders(s, dir), n = 4)
+      // whole weeks move together, so every batch is a per-key calendar
+      // SUFFIX of the previous ones
+      val srcDir =
+        Fixtures.writeSlices(weeklyOrders(s, dir), "wn", n = 4, "wk")
       val ckpt = java.nio.file.Files
         .createTempDirectory("smp_ckpt").toString
       val state = java.nio.file.Files

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.ops.{DedupText, Graph, Similarity}
 import graft.ops.Pin.PinOps
@@ -56,33 +55,6 @@ object Pipeline30Queries {
   /** Entry-point count — the deterministic bottom-by-hash start nodes
     * ([[graft.ops.Similarity.anchorSample]]'s rule at n = 4). */
   private[queries] val GsEntries = 4
-
-  /** Split `docs` into `n` doc_id-ordered slices and write each as a
-    * single parquet file with strictly increasing mtimes (the
-    * writeWeeklySlices replay-order pin) — the arriving-eval-suite
-    * fixture for stream_contam. */
-  private[graft] def writeDocSlices(docs: DataFrame, n: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("scm_src").toString
-    // ONE partitioned write instead of n filtered coalesce(1) passes
-    // (guide §1.2; the writeWeeklySlices rationale): repartition by
-    // __part puts each slice value in exactly one task, so every
-    // __part=i directory holds exactly one file, moved/renamed under
-    // the pinned-mtime replay-order contract. Same rows per slice.
-    val tmp = java.nio.file.Files.createTempDirectory("scm_t").toString
-    docs
-      .withColumn("__part", ntile(n).over(Window.orderBy(col("doc_id"))))
-      .repartition(n, col("__part"))
-      .write.partitionBy("__part").mode("overwrite").parquet(tmp)
-    for (i <- 1 to n) {
-      val part = new java.io.File(tmp, s"__part=$i").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(dir, f"bench_$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L),
-        s"stream_contam: could not pin mtime of $dst")
-    }
-    dir
-  }
 
   val queries: Map[String, Q] = Map(
 
@@ -155,9 +127,9 @@ object Pipeline30Queries {
       val d = Tables.documents(s, dir)
       val m101 = pmod(col("doc_id"), lit(101L))
       val m103 = pmod(col("doc_id"), lit(103L))
-      val srcDir = writeDocSlices(
+      val srcDir = Fixtures.writeSlices(
         d.where(m101 === 0 || m103 === 0).select("doc_id", "text"),
-        n = 3)
+        "doc_id", n = 3, "bench")
       val corpus = d.where(m101 =!= 0 && m103 =!= 0)
       val ckpt = java.nio.file.Files
         .createTempDirectory("scm_ckpt").toString

@@ -1,55 +1,27 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Rebuilds an (eagerly) checkpointed Dataset's [[LogicalRDD]] leaf so
-  * it carries the physical LAYOUT (outputPartitioning / outputOrdering)
-  * of the executed plan that produced the pinned blocks.
-  *
-  * Under AQE, `Dataset.localCheckpoint()` stamps the leaf with
-  * `UnknownPartitioning(0)` (the adaptive wrapper cannot promise a
-  * layout before execution), so EVERY same-key consumer of a pinned
-  * frame re-exchanges — and, for sort-merge joins, re-sorts — blocks
-  * that are already hash-partitioned and sorted on that key. For the
-  * iterative operators (which pin once per round and re-join the pinned
-  * frame on the same key every round) that is one avoidable shuffle per
-  * reference per round — guide §2.4 "remove shuffles outright": two
-  * operations keyed the same way should share one exchange.
-  *
-  * Safe ONLY for eager pins: the checkpoint has executed, so the
-  * AQE-final plan's `outputPartitioning` describes the materialized
-  * blocks exactly (coalesced counts included). Lazy pins keep the
-  * stock Unknown leaf — their runtime layout is not knowable at pin
-  * time. Attribute identities are remapped from the physical output to
-  * the leaf's output via Spark's own
-  * [[LogicalRDD.buildOutputAssocForRewrite]]; any partitioning or
-  * ordering expression that does not fully remap degrades to
-  * Unknown/empty rather than lying about the blocks.
+/** Rebuilds a checkpointed DataFrame's [[LogicalRDD]] leaf WITHOUT the
+  * origin plan's statistics — the leaf behind
+  * [[graft.ops.Pin.resetStats]] and [[graft.ops.Pin.resetStatsLazy]].
   *
   * Lives in `org.apache.spark.sql` only to reach the `private[sql]`
-  * plan-to-Dataset constructors; everything else referenced is public
+  * plan-to-Dataset constructor; everything else referenced is public
   * Spark API surface (LogicalRDD is a public case class).
   */
 object GraftPinShim {
 
-  private def finalPlan(qe: execution.QueryExecution): SparkPlan =
-    qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-
   /** The pinned frame's leaf rebuilt over its INTERNAL-row RDD with no
-    * origin statistics and Unknown layout — the
-    * [[graft.ops.Pin.resetStats]] leaf. The public
+    * origin statistics and Unknown layout. The public
     * `createDataFrame(cp.rdd, schema)` round-trip it replaces decoded
     * every row to an external Row and re-encoded it on every downstream
     * read of the pinned frame (a per-reference codec tax); this keeps
     * the UnsafeRow blocks as-is. Layout is deliberately dropped — see
-    * the coalesced-boundary note at [[graft.ops.Pin.apply]]. */
+    * the coalesced-boundary note at [[graft.ops.Pin.apply]]. A frame
+    * whose analyzed plan is not a LogicalRDD falls back to that public
+    * round-trip. */
   def dropStats(pinned: DataFrame): DataFrame =
     pinned.queryExecution.analyzed match {
       case l: LogicalRDD =>
@@ -61,57 +33,4 @@ object GraftPinShim {
       case _ =>
         pinned.sparkSession.createDataFrame(pinned.rdd, pinned.schema)
     }
-
-  /** `pinned` (the eager checkpoint of `orig`) with its leaf rebuilt to
-    * carry `orig`'s executed layout. `keepStats` forwards the origin
-    * plan's sizeInBytes (the `.pin()` posture — real sizes feed
-    * broadcast decisions); `keepStats = false` is the
-    * [[graft.ops.Pin.resetStats]] posture (leaf reverts to the
-    * conservative default size, so join-rich round functions cannot
-    * compound size estimates across rounds). */
-  def repin[T](orig: Dataset[T], pinned: Dataset[T],
-               keepStats: Boolean): Dataset[T] = {
-    val cp = pinned.asInstanceOf[classic.Dataset[T]]
-    cp.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        val session = cp.sparkSession
-        val origC = orig.asInstanceOf[classic.Dataset[T]]
-        val fin = finalPlan(origC.queryExecution)
-        val outSet = AttributeSet(l.output)
-        val assocOpt =
-          LogicalRDD.buildOutputAssocForRewrite(fin.output, l.output)
-        def remap(e: Expression): Option[Expression] = assocOpt.flatMap {
-          assoc =>
-            val r = e.transform { case a: Attribute => assoc.getOrElse(a, a) }
-            if (r.references.subsetOf(outSet)) Some(r) else None
-        }
-        val part: Partitioning = fin.outputPartitioning match {
-          case p: Expression =>
-            remap(p) match {
-              case Some(pp: Partitioning) => pp
-              case _ => UnknownPartitioning(0)
-            }
-          case p => p // SinglePartition etc: attribute-free, truthful
-        }
-        val ord: Seq[SortOrder] = {
-          val rs = fin.outputOrdering.map(remap)
-          if (rs.nonEmpty && rs.forall(_.isDefined))
-            rs.map(_.get.asInstanceOf[SortOrder])
-          else Nil
-        }
-        // sizeInBytes only: column stats would need the full
-        // rewriteStatsAndConstraints dance and nothing here produces
-        // them (no CBO/ANALYZE); broadcast decisions read sizeInBytes.
-        val stats: Option[Statistics] =
-          if (keepStats)
-            Some(Statistics(sizeInBytes =
-              origC.queryExecution.optimizedPlan.stats.sizeInBytes))
-          else None
-        val plan = new LogicalRDD(l.output, l.rdd, part, ord,
-          l.isStreaming, l.stream)(session, stats, None)
-        new classic.Dataset[T](session.sessionState.executePlan(plan),
-          () => cp.encoder)
-      case _ => pinned
-    }
-  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
-import graft.queries.Pipeline29Queries
+import graft.queries.Fixtures
 import graft.streaming.ProfileMonitor
 
 /** Round-14 batch: the PQ codebook-reuse identity (inc_pq_delta, the
@@ -73,7 +73,7 @@ class Round26Spec extends SparkSuite {
   test("ProfileMonitor: a drain STOPPED after two batches and resumed " +
       "from the same checkpoint + state lands on the batch profile " +
       "exactly (the stream_mp restart contract)") {
-    val srcAll = Pipeline29Queries.writeWeeklySlices(weekly, n = 4)
+    val srcAll = Fixtures.writeSlices(weekly, "wn", n = 4, "wk")
     val files = new java.io.File(srcAll).listFiles().sortBy(_.getName)
     assert(files.length === 4)
     // phase 1: only the first two slices are visible; AvailableNow
@@ -110,6 +110,15 @@ class Round26Spec extends SparkSuite {
       .as[(String, Long, Long, Long)].collect().toSet
     assert(streamed === batchProfile,
       "restarted streaming fold diverged from the batch matrix profile")
+  }
+
+  test("writeSlices: a series with fewer distinct weeks than slices " +
+      "fails naming the empty slice (no NPE on its missing directory)") {
+    val twoWeeks = weekly.join(
+      weekly.select("wn").distinct().orderBy("wn").limit(2), "wn")
+    val e = intercept[IllegalArgumentException](
+      Fixtures.writeSlices(twoWeeks, "wn", n = 4, "wk"))
+    assert(e.getMessage.contains("slice 3 of 4 is empty"), e.getMessage)
   }
 
   test("ProfileMonitor.foldBatch: an already-committed batch id is a " +

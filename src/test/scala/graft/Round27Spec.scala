@@ -145,8 +145,8 @@ class Round27Spec extends SparkSuite {
     val corpus = docsDf(
       10L -> "a b c d e", 11L -> "x y z w v", 12L -> "p q r s t")
     val bench = docsDf(1L -> "a b c", 2L -> "c d e", 3L -> "x y z")
-    val srcAll = graft.queries.Pipeline30Queries
-      .writeDocSlices(bench, n = 3)
+    val srcAll = graft.queries.Fixtures
+      .writeSlices(bench, "doc_id", n = 3, "bench")
     val files = new java.io.File(srcAll).listFiles().sortBy(_.getName)
     assert(files.length === 3)
     val src = java.nio.file.Files
@@ -178,6 +178,14 @@ class Round27Spec extends SparkSuite {
       .as[(Long, Long)].collect().toMap
     assert(streamed === rebuild)
     assert(streamed.nonEmpty)
+  }
+
+  test("writeSlices: a benchmark with fewer docs than slices fails " +
+      "naming the empty slice (no NPE on its missing directory)") {
+    val e = intercept[IllegalArgumentException](graft.queries.Fixtures
+      .writeSlices(docsDf(1L -> "a b c", 2L -> "c d e"), "doc_id", n = 3,
+        "bench"))
+    assert(e.getMessage.contains("slice 3 of 3 is empty"), e.getMessage)
   }
 
   test("ContamMonitor.foldBatch: a committed batch id is a no-op, and " +

@@ -11,17 +11,22 @@ class Round4bSpec extends SparkSuite {
   // ---- Freq (Misra-Gries heavy hitters) ----
 
   test("heavyHitters equals exact GROUP BY + HAVING on a skewed stream") {
-    // heavy: "a" (40%), "b" (30%); tail: 30 singletons — spread over many
-    // partitions so the per-partition summaries genuinely decrement
-    val terms = (Seq.fill(400)("a") ++ Seq.fill(300)("b") ++
-      (0 until 300).map(i => s"t$i")).toDF("w").repartition(8)
-    val got = Freq.heavyHitters(terms, "w", k = 5)
-      .as[(String, Long)].collect().toMap
-    val n = 1000L
-    val want = terms.groupBy("w").count().as[(String, Long)]
-      .collect().filter { case (_, c) => c * 5 > n }.toMap
-    assert(got === want)
-    assert(got.keySet === Set("a", "b"))
+    // heavy: "a" (40%), "b" (30%); 300 tail rows in both regimes: all
+    // distinct (the n-gram/URL regime) and a bounded 10-term vocabulary
+    // (3% each) — spread over many partitions so the per-partition
+    // summaries genuinely decrement
+    for (tail <- Seq((0 until 300).map(i => s"t$i"),
+                     (0 until 300).map(i => s"t${i % 10}"))) {
+      val terms = (Seq.fill(400)("a") ++ Seq.fill(300)("b") ++ tail)
+        .toDF("w").repartition(8)
+      val got = Freq.heavyHitters(terms, "w", k = 5)
+        .as[(String, Long)].collect().toMap
+      val n = 1000L
+      val want = terms.groupBy("w").count().as[(String, Long)]
+        .collect().filter { case (_, c) => c * 5 > n }.toMap
+      assert(got === want)
+      assert(got.keySet === Set("a", "b"))
+    }
   }
 
   test("mgCandidates is a superset of true heavy hitters on any layout") {

@@ -140,5 +140,17 @@ class SamplingTextSpec extends SparkSuite {
       s"header should inflate raw candidates: raw=$rawPairs filtered=${filtered.size}")
     assert(filtered === Set((0L, 1L), (100L, 101L)),
       s"planted near-dups and identical all-boilerplate docs survive: $filtered")
+    // recall on a clean corpus: groups of 10 docs share one text over a
+    // large vocabulary, so the candidates are exactly the within-group
+    // pairs — none lost, none across groups
+    val planted = Seq.tabulate(60) { i =>
+      (i.toLong, (0 until 30).map(k =>
+        s"w${(i / 10 * 10L * (k + 7) + k * k * 31) % 99991}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val within = (for (a <- 0L until 60L; b <- a + 1 until 60L
+                       if a / 10 == b / 10) yield (a, b)).toSet
+    assert(DedupText.lshCandidates(
+        DedupText.minhashSignatures(planted, "doc_id", "text"), "doc_id", 8, 4)
+      .as[(Long, Long)].collect().toSet === within)
   }
 }
