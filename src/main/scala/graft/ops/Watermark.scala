@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** T1/F8/S6/W5 — incremental-sync watermark algebra.
   *
@@ -49,8 +50,9 @@ object Watermark {
     }
 
   /** A2 — watermark candidate: max modified over the staged snapshot.
-    * Distributed partial+final max; returns a 1-row DataFrame so callers
-    * can keep it in-plan (oracle-checkable) or `.head` it in the runner. */
+    * Distributed partial+final max as a 1-row DataFrame; it is the
+    * `a2_watermark_max` oracle query. The runner does not run it: it
+    * observes the same max on the staged rows of its committed write. */
   def candidate(staged: DataFrame, modified: String = "modified_ms"): DataFrame =
     staged.agg(max(col(modified)).as("last_modified_ms"))
 
@@ -64,17 +66,37 @@ object Watermark {
 
   // ---- S6/W5: state persisted as a tiny parquet table ----
 
+  /** The state table's layout, one row per (tablename, synctype); shared by
+    * [[readState]] and [[writeState]] so neither infers it from the files
+    * (an inference is a Spark job of its own). */
+  val StateSchema: StructType = StructType(Seq(
+    StructField("tablename", StringType),
+    StructField("baseurl", StringType),
+    StructField("path", StringType),
+    StructField("synctype", StringType),
+    StructField("lastmodified", LongType),
+    StructField("syncstart", LongType)))
+
   /** Read sync state for a key; None on cold start
-    * (reference: getLastSyncDates, src/lib/client.js:614-699). */
+    * (reference: getLastSyncDates, src/lib/client.js:614-699). A state row
+    * whose `lastmodified` or `syncstart` reads as null (files written in
+    * another layout) fails naming `statePath`: a null watermark must not
+    * pass for a value or a cold start. */
   def readState(spark: SparkSession, statePath: String, tablename: String,
                 synctype: String): Option[graft.SyncState] = {
     // a crash between the two renames of writeState parks the state at
     // .bak; reading past it would cold-start the next deltaSync from 1900
     if (!AtomicDir.restore(statePath)) return None
-    val rows = spark.read.parquet(statePath)
+    val rows = spark.read.schema(StateSchema).parquet(statePath)
       .where(col("tablename") === tablename && col("synctype") === synctype)
       .select("lastmodified", "syncstart").limit(1).collect()
-    rows.headOption.map(r => graft.SyncState(r.getLong(0), r.getLong(1)))
+    rows.headOption.map { r =>
+      if (r.isNullAt(0) || r.isNullAt(1))
+        throw new IllegalStateException(s"sync state at $statePath has a " +
+          s"null lastmodified or syncstart for ($tablename, $synctype): " +
+          s"its layout differs from ${StateSchema.simpleString}")
+      graft.SyncState(r.getLong(0), r.getLong(1))
+    }
   }
 
   /** Upsert the single state row (reference does DELETE+INSERT,
@@ -82,19 +104,13 @@ object Watermark {
     * the (tiny) state table — at scale this stays O(#sync-streams). */
   def writeState(spark: SparkSession, statePath: String, tablename: String,
                  synctype: String, st: graft.SyncState): Unit = {
-    import spark.implicits._
-    val existing = new java.io.File(statePath) match {
-      case f if f.exists() =>
-        spark.read.parquet(statePath)
-          .where(!(col("tablename") === tablename && col("synctype") === synctype))
-      case _ =>
-        Seq.empty[(String, String, String, String, Long, Long)]
-          .toDF("tablename", "baseurl", "path", "synctype", "lastmodified", "syncstart")
-    }
-    val row = Seq((tablename, null: String, null: String, synctype,
-      st.lastModified, st.syncStart))
-      .toDF("tablename", "baseurl", "path", "synctype", "lastmodified", "syncstart")
-    val merged = existing.unionByName(row).coalesce(1)
+    val row = spark.createDataFrame(java.util.List.of(Row(tablename, null,
+      null, synctype, st.lastModified, st.syncStart)), StateSchema)
+    val merged =
+      if (!new java.io.File(statePath).exists()) row
+      else spark.read.schema(StateSchema).parquet(statePath)
+        .where(!(col("tablename") === tablename && col("synctype") === synctype))
+        .unionByName(row).coalesce(1)
     merged.write.mode("overwrite").parquet(statePath + ".tmp")
     // a failed rename must not silently lose the watermark — losing it
     // falls back to a cold-start re-sync from 1900

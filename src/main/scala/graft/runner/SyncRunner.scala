@@ -1,8 +1,13 @@
 package graft.runner
 
 import java.util.concurrent.atomic.AtomicBoolean
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.{SyncState, SyncType}
 import graft.ops._
 
@@ -14,7 +19,11 @@ import graft.ops._
 trait TargetTable {
   def read(spark: SparkSession): DataFrame
   /** Atomically replace the table contents with `df` (the post-merge
-    * state). Implementations must be all-or-nothing (T6). */
+    * state). Implementations must be all-or-nothing (T6) and must run `df`
+    * itself through a Spark action (a write, `foreachPartition`, ...):
+    * the runner takes the committed row count and the watermark from
+    * metrics observed on `df` during that action, and fails the sync,
+    * naming the target, when `overwrite` returns without having run it. */
   def overwrite(df: DataFrame): Unit
   def exists: Boolean
 }
@@ -30,6 +39,7 @@ final class ParquetTarget(spark: SparkSession, path: String) extends TargetTable
     df.write.mode("overwrite").parquet(tmp)
     AtomicDir.swap(tmp, path)
   }
+  override def toString: String = s"ParquetTarget($path)"
 }
 
 final case class SyncConfig(
@@ -55,13 +65,19 @@ final case class SyncResult(
   *    `modified >= wm OR modified IS NULL` on the tombstone pass (when the
   *    tombstones carry the modified column). On parquet this prunes row
   *    groups; the SRI source turns either bound into `modifiedSince=` on
-  *    the request URL (only that bound reaches the URL).
+  *    the request URL (only that bound reaches the URL). The next
+  *    watermark is observed (`Dataset.observe`) as the max `modified` of
+  *    the staged rows the committed write consumed, and the row count
+  *    after the sync is observed on that write too: a sync makes no
+  *    separate watermark query and never re-reads the target.
   *  - T4 single-flight: a sync rejects immediately if another is running
   *    on this runner (reference: client.js:1628-1631).
-  *  - T6 atomicity: target overwrite is atomic; the watermark is written
-  *    only after the target commit, so a crash between the two re-syncs an
-  *    overlap (at-least-once) that A1 dedup + key merge make idempotent.
-  *  - dryRun: plan + compute, skip both commits (reference README.md:69).
+  *  - T6 atomicity: target overwrite is atomic; the watermark, observed
+  *    from the committed pass, is written only after the target commit,
+  *    so a crash between the two re-syncs an overlap (at-least-once) that
+  *    A1 dedup + key merge make idempotent.
+  *  - dryRun: plan + compute (one count of the observed frame), skip both
+  *    commits (reference README.md:69).
   */
 final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
 
@@ -73,7 +89,7 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
       val t0 = now()
       val current = if (target.exists) target.read(spark) else emptyLike(source)
       val merged = Merge.full(current, source, cfg.keys, cfg.modifiedCol)
-      commit(target, merged, SyncType.Full, source, t0)
+      commit(target, merged, SyncType.Full, t0)
     }
 
   /** Reference: deltaSync(modifiedSince?) — explicit `modifiedSince`
@@ -86,7 +102,9 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
         SyncType.Delta)
       val since = modifiedSince.orElse(prev.map(_.lastModified))
         .getOrElse(Watermark.ColdStartMs)
+      val seen = Observation()
       val staged = Watermark.modifiedSince(source, since, cfg.modifiedCol)
+        .observe(seen, max(col(cfg.modifiedCol)).as("max"))
       // the tombstone pass is watermark-fenced too (reference applies
       // modifiedSince to the deleted-resources query, client.js:1684-1694);
       // rows without a modified column/value are kept conservatively
@@ -98,13 +116,13 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
       val current = if (target.exists) target.read(spark) else emptyLike(source)
       val merged = Merge.delta(current, staged, tombsFenced, cfg.keys,
         cfg.modifiedCol)
-      val seen = Watermark.candidate(staged, cfg.modifiedCol)
-        .collect().headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-      val res = commit(target, merged, SyncType.Delta, source, t0)
+      val res = commit(target, merged, SyncType.Delta, t0)
       if (modifiedSince.isEmpty && !cfg.dryRun) {
         val t1 = now()
-        val wm = Watermark.advance(seen, prev.map(_.lastModified)
-          .getOrElse(Watermark.ColdStartMs), prev.map(_.syncStart), t0, t1)
+        // completed by the write that completed the commit's row count
+        val wm = Watermark.advance(observed[Long](seen, "max"),
+          prev.map(_.lastModified).getOrElse(Watermark.ColdStartMs),
+          prev.map(_.syncStart), t0, t1)
         Watermark.writeState(spark, cfg.statePath, cfg.tableName,
           SyncType.Delta, SyncState(wm, t0))
         res.copy(watermark = Some(wm))
@@ -127,7 +145,7 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
       val fetched = fetchMissing(missing) // S2 keyed batch fetch
       val merged = Merge.safe(afterDelta, members, fetched, cfg.keys,
         cfg.modifiedCol)
-      commit(target, merged, SyncType.SafeDelta, source, t0)
+      commit(target, merged, SyncType.SafeDelta, t0)
     }
 
   // ---- internals ----
@@ -139,19 +157,62 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
     try body finally running.set(false)
   }
 
+  /** Run `merged` once, through the target's write (or a count on a dry
+    * run), and take the row count from that pass. */
   private def commit(target: TargetTable, merged: DataFrame, syncType: String,
-                     schemaLike: DataFrame, t0: Long): SyncResult = {
-    val result =
-      if (cfg.dryRun) merged.count()
-      else { target.overwrite(merged); target.read(spark).count() }
-    SyncResult(syncType, result, None, now() - t0)
+                     t0: Long): SyncResult = {
+    val rows = Observation()
+    val observedMerged = merged.observe(rows, count(lit(1)).as("rows"))
+    val rowsAfter =
+      if (cfg.dryRun) observedMerged.count()
+      else {
+        target.overwrite(observedMerged)
+        if (!rows.future.isCompleted) SyncRunner.awaitQueryListeners(spark)
+        if (!rows.future.isCompleted)
+          throw new IllegalStateException(s"$target: overwrite returned " +
+            "without running the merged rows through a Spark action, so the " +
+            "sync observed no row count or watermark (TargetTable.overwrite)")
+        // no value only when the optimizer pruned the frame as empty
+        observed[Long](rows, "rows").getOrElse(0L)
+      }
+    SyncResult(syncType, rowsAfter, None, now() - t0)
   }
+
+  /** A completed observation's value; None when it is null (no rows) or
+    * missing (the optimizer pruned the observed frame as empty). */
+  private def observed[A](o: Observation, name: String): Option[A] =
+    o.get.get(name).flatMap(v => Option(v.asInstanceOf[A]))
 
   private def emptyLike(df: DataFrame): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       df.schema)
 
   private def now(): Long = System.currentTimeMillis()
+}
+
+object SyncRunner {
+
+  /** Blocks until the session's query listeners, which complete every
+    * `Observation`, have handled each query that ended before this call.
+    * They hear of queries in the order the queries end, so a marker query
+    * run now (it plans over an empty local relation and starts no Spark
+    * job) is handled after all of them. */
+  private[graft] def awaitQueryListeners(spark: SparkSession): Unit = {
+    val name = s"sync_marker_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val handled = Promise[Unit]()
+    val listener = new QueryExecutionListener {
+      private def check(qe: QueryExecution): Unit =
+        if (qe.analyzed.output.exists(_.name == name)) handled.trySuccess(())
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = check(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = check(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.createDataFrame(java.util.List.of[Row](), new StructType())
+        .select(lit(1).as(name)).collect()
+      Await.ready(handled.future, 10.minutes)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
 
 /** T5 — multi-stream orchestration (reference `Sri2DbMulti`,

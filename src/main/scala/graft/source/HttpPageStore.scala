@@ -74,12 +74,19 @@ final class HttpPageStore(
   /** Test/diagnostic hook: how many bodies are currently retained. */
   def retainedBodies: Int = lru.synchronized(lru.size())
 
+  @volatile private var walkedBytes: Option[Long] = None
+
+  /** The UTF-8 bytes of the bodies the last walk downloaded. */
+  override def listedBytes: Option[Long] = walkedBytes
+
   override def listPages(): Seq[String] = {
     val pages = scala.collection.mutable.ArrayBuffer[String]()
+    var bytes = 0L
     var url: String = firstPageUrl
     while (url != null) {
       pages += url
       val b = fetch(url)
+      bytes += b.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
       cachePut(url, b)
       // parse only to find the next link, then DROP the body (modulo the
       // bounded LRU) — retention here is the 100 TB driver-OOM trap
@@ -87,6 +94,7 @@ final class HttpPageStore(
       url = if (next.isMissingNode || next.isNull) null
       else resolve(firstPageUrl, next.asText())
     }
+    walkedBytes = Some(bytes)
     pages.toSeq
   }
 

@@ -1,6 +1,7 @@
 package graft.source
 
 import java.util
+import java.util.OptionalLong
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -33,7 +34,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    parameter yields the same rows;
   *  - projection pushdown `expand=NONE` (hrefs only) — via
   *    SupportsPushDownRequiredColumns, applied at parse time (the URL is
-  *    not rewritten; `resourcetype` is not sent either).
+  *    not rewritten; `resourcetype` is not sent either);
+  *  - size statistics — via SupportsReportStatistics: the scan reports the
+  *    bytes of the pages its (single) next-link walk listed. That size
+  *    decides whether Spark broadcasts a join side read from it: a steady
+  *    delta's few changed pages are broadcast (the delta merge then does
+  *    not shuffle the target), a large catch-up is not. A store that
+  *    cannot tell its size reports none, and Spark assumes it is large.
   *
   * Transport is pluggable: `pages` option points at a directory of JSON
   * page files (deterministic, testable) or at the first page of a live SRI
@@ -85,15 +92,20 @@ trait PageStore extends Serializable {
     * carries only ITS page, and the store must NOT retain the whole
     * corpus to answer this (see HttpPageStore's driver-memory bound). */
   def cachedBody(page: String): Option[String] = None
+  /** Bytes of the pages the last [[listPages]] listed, when the store
+    * knows them without further I/O; None when unknown. */
+  def listedBytes: Option[Long] = None
 }
 
 final class LocalDirPageStore(dir: String) extends PageStore {
+  @volatile private var bytes: Option[Long] = None
   override def listPages(): Seq[String] = {
-    val fs = new java.io.File(dir).listFiles()
-    if (fs == null) Seq.empty
-    else fs.filter(_.getName.endsWith(".json")).map(_.getAbsolutePath)
-      .sorted.toSeq
+    val fs = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".json")).sortBy(_.getAbsolutePath)
+    bytes = Some(fs.map(_.length).sum)
+    fs.map(_.getAbsolutePath).toSeq
   }
+  override def listedBytes: Option[Long] = bytes
   override def fetch(page: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(page)),
       java.nio.charset.StandardCharsets.UTF_8)
@@ -176,7 +188,7 @@ class SriScanBuilder(pages: String, headers: Map[String, String] = Map.empty)
 class SriScan(store: PageStore, required: StructType,
               minModified: Option[Long], keepUndated: Boolean,
               deletedOnly: Boolean)
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -198,6 +210,17 @@ class SriScan(store: PageStore, required: StructType,
       .map(p => SriInputPartition(p, store.cachedBody(p)): InputPartition)
       .toArray
   override def planInputPartitions(): Array[InputPartition] = partitions
+
+  /** The bytes of the listed pages, measured by the same memoized walk. */
+  override def estimateStatistics(): Statistics = {
+    partitions.length // walks the pages unless planning already did
+    val size = store.listedBytes
+    new Statistics {
+      override def sizeInBytes(): OptionalLong =
+        size.fold(OptionalLong.empty())(OptionalLong.of)
+      override def numRows(): OptionalLong = OptionalLong.empty()
+    }
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SriReaderFactory(store, required.fieldNames, minModified, keepUndated,

@@ -118,6 +118,29 @@ class MergeSpec extends SparkSuite {
     assert(new java.io.File(tmp).exists() && !new java.io.File(tmp + ".bak").exists())
   }
 
+  test("writeState writes the StateSchema that readState reads") {
+    val tmp = java.nio.file.Files.createTempDirectory("wm").toString + "/state"
+    Watermark.writeState(spark, tmp, "t1", SyncType.Delta, SyncState(42L, 7L))
+    Watermark.writeState(spark, tmp, "t2", SyncType.Delta, SyncState(43L, 8L))
+    def shape(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => f.name -> f.dataType).toSeq
+    assert(shape(spark.read.parquet(tmp).schema) === shape(Watermark.StateSchema))
+  }
+
+  test("a state file missing syncstart fails naming the state path") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("wm").toString + "/state"
+    // an older layout: every column but syncstart
+    Seq(("t1", null: String, null: String, SyncType.Delta, 42L))
+      .toDF("tablename", "baseurl", "path", "synctype", "lastmodified")
+      .write.parquet(tmp)
+    val e = intercept[IllegalStateException](
+      Watermark.readState(spark, tmp, "t1", SyncType.Delta))
+    assert(e.getMessage.contains(tmp), e.getMessage)
+    // a key with no row is still a cold start, not an error
+    assert(Watermark.readState(spark, tmp, "t2", SyncType.Delta).isEmpty)
+  }
+
   test("diff operators: changed/new/missing row sets are disjoint and complete") {
     val target = sri.where(col("modified_ms") < cut)
     val staged = Dedup.keepLatest(sri.where(col("modified_ms") >= cut))

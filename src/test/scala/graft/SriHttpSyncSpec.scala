@@ -22,6 +22,7 @@ class SriHttpSyncSpec extends SparkSuite {
   private final class TinySri(limit: Int) {
     @volatile var resources: Vector[Res] = Vector.empty
     val queries = new ConcurrentLinkedQueue[String]()
+    val bytesServed = new java.util.concurrent.atomic.AtomicLong()
     private val server =
       HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/things", { ex =>
@@ -38,6 +39,7 @@ class SriHttpSyncSpec extends SparkSuite {
         q.get("$$meta.deleted").contains("any"),
         q.get("modifiedSince").map(java.time.Instant.parse(_).toEpochMilli),
         other).getBytes(UTF_8)
+      bytesServed.addAndGet(body.length.toLong)
       ex.sendResponseHeaders(200, body.length.toLong)
       ex.getResponseBody.write(body)
       ex.close()
@@ -77,6 +79,7 @@ class SriHttpSyncSpec extends SparkSuite {
     }
 
     def takeQueries(): Seq[String] = {
+      bytesServed.set(0)
       val out = queries.asScala.toVector; queries.clear(); out
     }
     def stop(): Unit = server.stop(0)
@@ -144,6 +147,30 @@ class SriHttpSyncSpec extends SparkSuite {
       val full = api.takeQueries()
       assert(full.nonEmpty && full.forall(sinceOf(_).isEmpty), full)
       assert(rows(s"$base/full") === rows(s"$base/http"))
+    } finally api.stop()
+  }
+
+  test("the scan reports the bytes its one next-link walk served") {
+    val api = new TinySri(limit = 3)
+    try {
+      api.resources = (1 to 8).map(i => Res(s"k$i", t0 + i * 60000L,
+        deleted = i == 4, 1)).toVector
+      val scan = new graft.source.SriScanBuilder(api.url).build()
+        .asInstanceOf[graft.source.SriScan]
+      api.takeQueries()
+      val size = scan.estimateStatistics().sizeInBytes().getAsLong
+      val served = api.bytesServed.get
+      assert(scan.planInputPartitions().length === 3)
+      // statistics first, partitions second: one walk of three pages
+      assert(api.takeQueries().size === 3)
+      assert(size === served)
+
+      // through Spark: the optimizer's size and the read share the walk
+      val df = spark.read.format("sri").option("pages", api.url).load()
+      assert(df.queryExecution.optimizedPlan.stats.sizeInBytes ===
+        api.bytesServed.get)
+      assert(df.collect().length === 8)
+      assert(api.takeQueries().size === 3)
     } finally api.stop()
   }
 }

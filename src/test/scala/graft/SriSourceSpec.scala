@@ -1,11 +1,18 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.connector.read.SupportsReportStatistics
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.functions._
+import graft.source.{LocalDirPageStore, PageStore, SriScan, SriScanBuilder, SriSource}
 
 /** DataSource V2 SRI scan: envelope normalization, one-partition-per-page
   * parallelism, filter + column pushdown. */
-class SriSourceSpec extends SparkSuite {
+class SriSourceSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private def writePages(): String = {
     val dir = Files.createTempDirectory("sripages").toString
@@ -171,5 +178,93 @@ class SriSourceSpec extends SparkSuite {
       staged.limit(0), staged, tombs)
     assert(merged.select("href").collect().map(_.getString(0)).sorted.toSeq ===
       Seq("/a/1", "/a/2"))
+  }
+
+  private def pageBytes(dir: String): Long =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".json"))
+      .map(_.length).sum
+
+  test("a page directory scan reports the bytes of its page files") {
+    val dir = writePages()
+    val scan = new SriScanBuilder(dir).build()
+      .asInstanceOf[SupportsReportStatistics]
+    assert(scan.estimateStatistics().sizeInBytes().getAsLong === pageBytes(dir))
+    // the size reaches the optimizer's statistics of a full-width read
+    val df = spark.read.format("sri").option("pages", dir).load()
+    assert(df.queryExecution.optimizedPlan.stats.sizeInBytes === pageBytes(dir))
+  }
+
+  test("a store that cannot tell its size reports no size") {
+    val dir = writePages()
+    val unsized = new PageStore {
+      private val files = new LocalDirPageStore(dir)
+      override def listPages(): Seq[String] = files.listPages()
+      override def fetch(page: String): String = files.fetch(page)
+    }
+    val scan = new SriScan(unsized, SriSource.schema, None, false, false)
+    assert(!scan.estimateStatistics().sizeInBytes().isPresent)
+    assert(scan.planInputPartitions().length === 3)
+  }
+
+  /** A target of `n` SRI rows `/a/t<i>` plus the fixture's `/a/1`, as a
+    * parquet directory. */
+  private def writeTarget(n: Int): String = {
+    val path = Files.createTempDirectory("sritarget").toString + "/t"
+    spark.range(n).select(concat(lit("/a/t"), col("id")).as("href"),
+        col("id").cast("string").as("key"), lit(1704067200000L).as("modified_ms"),
+        lit("{}").as("jsondata"), lit("A").as("resourcetype"))
+      .union(spark.range(1).select(lit("/a/1"), lit("1"),
+        lit(1704067200000L), lit("{}"), lit("A")))
+      .write.parquet(path)
+    path
+  }
+
+  private def deltaMerge(pages: String, target: String) = {
+    val src = spark.read.format("sri").option("pages", pages).load()
+    val staged = src.where(col("resourcetype") =!= "deleted" ||
+      col("resourcetype").isNull)
+    val tombs = src.where(col("resourcetype") === "deleted")
+      .select("href", "modified_ms")
+    ops.Merge.delta(spark.read.parquet(target), staged, tombs)
+  }
+
+  private def sortedHrefs(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("href").collect().map(_.getString(0)).sorted.toSeq
+
+  /** Shuffles with the target's file scan below them. */
+  private def targetShuffles(plan: SparkPlan): Seq[SparkPlan] =
+    collect(plan) {
+      case s: ShuffleExchangeExec
+        if collect(s) { case f: FileSourceScanExec => f }.nonEmpty => s
+    }
+
+  test("a small delta's keys are broadcast: the target is not shuffled; " +
+    "below the broadcast threshold the merge stays a sort-merge join") {
+    val pages = writePages()
+    val target = writeTarget(2000)
+    val merged = deltaMerge(pages, target)
+    val got = sortedHrefs(merged)
+    assert(got.size === 2000 + 4 && got.contains("/a/2") &&
+      !got.contains("/a/5"))
+    val plan = merged.queryExecution.executedPlan
+    assert(collect(plan) {
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j }.size === 1,
+      plan)
+    assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, plan)
+    assert(targetShuffles(plan).isEmpty, plan)
+
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "1") // below the size of any delta
+    try {
+      val big = deltaMerge(pages, target)
+      assert(sortedHrefs(big) === got)
+      val smj = big.queryExecution.executedPlan
+      assert(collect(smj) {
+        case j: SortMergeJoinExec if j.joinType == LeftAnti => j }.size === 1,
+        smj)
+      assert(collect(smj) { case j: BroadcastHashJoinExec => j }.isEmpty, smj)
+      assert(targetShuffles(smj).nonEmpty, smj)
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
