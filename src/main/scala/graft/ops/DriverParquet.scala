@@ -1,0 +1,110 @@
+package graft.ops
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
+
+/** Parquet metadata and tiny tables read and written on the driver, with
+  * parquet-hadoop: no Spark job. A directory is laid out the way Spark's
+  * own writer lays out a table (data files next to hidden `_`/`.` files),
+  * and files written here carry Spark's schema in their footer, so
+  * `spark.read.parquet` reads them as the schema they were written with. */
+object DriverParquet {
+
+  /** The footer key under which Spark's Parquet writer stores the table's
+    * Catalyst schema as JSON. */
+  val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The data files of a table directory, in name order (Spark skips
+    * names starting with `_` or `.`: `_SUCCESS`, checksum files). */
+  def dataFiles(conf: Configuration, dir: String): Seq[Path] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .sortBy(_.getName)
+  }
+
+  /** The schema Spark wrote into the footer of the table's first data
+    * file; fails naming `dir` when there is no data file or the footer
+    * holds no Spark schema. */
+  def sparkSchema(conf: Configuration, dir: String): StructType = {
+    val file = dataFiles(conf, dir).headOption.getOrElse(
+      throw new IllegalStateException(s"no Parquet data file under $dir"))
+    val kv = Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(file, conf)))(
+      _.getFooter.getFileMetaData.getKeyValueMetaData)
+    Option(kv.get(SparkSchemaKey)).map(DataType.fromJson) match {
+      case Some(s: StructType) => s
+      case _ => throw new IllegalStateException(
+        s"$dir: data file ${file.getName} has no Spark schema in its footer")
+    }
+  }
+
+  /** Every row of the table at `dir` as `schema` (string and long
+    * columns): a column a file lacks reads as null. */
+  def readRows(conf: Configuration, dir: String, schema: StructType): Seq[Row] =
+    dataFiles(conf, dir).flatMap { file =>
+      Using.resource(ParquetReader.builder(new GroupReadSupport(), file)
+          .withConf(conf).build()) { reader =>
+        Iterator.continually(reader.read()).takeWhile(_ != null)
+          .map(g => toRow(g, schema)).toList
+      }
+    }
+
+  /** Write `rows` of `schema` (string and long columns) as the single data
+    * file of a new directory `dir`, replacing what is there. */
+  def writeRows(conf: Configuration, dir: String, schema: StructType,
+                rows: Seq[Row]): Unit = {
+    val d = new Path(dir)
+    d.getFileSystem(conf).delete(d, true)
+    val msg = messageType(schema)
+    Using.resource(ExampleParquetWriter.builder(new Path(d, "part-00000.parquet"))
+        .withConf(conf).withType(msg)
+        .withExtraMetaData(Map(SparkSchemaKey -> schema.json).asJava)
+        .build()) { w =>
+      rows.foreach { r =>
+        val g = new SimpleGroup(msg)
+        schema.fields.indices.filterNot(r.isNullAt).foreach { i =>
+          schema(i).dataType match {
+            case StringType => g.add(i, r.getString(i))
+            case LongType => g.add(i, r.getLong(i))
+          }
+        }
+        w.write(g)
+      }
+    }
+  }
+
+  private def messageType(schema: StructType): MessageType =
+    new MessageType("spark_schema", schema.fields.toSeq.map[Type] { f =>
+      f.dataType match {
+        case StringType => Types.optional(PrimitiveTypeName.BINARY)
+          .as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case LongType => Types.optional(PrimitiveTypeName.INT64).named(f.name)
+        case t => throw new IllegalArgumentException(
+          s"driver-side Parquet supports string and long columns, not $t (${f.name})")
+      }
+    }.asJava)
+
+  private def toRow(g: Group, schema: StructType): Row = {
+    val t = g.getType
+    Row.fromSeq(schema.fields.toSeq.map { f =>
+      if (!t.containsField(f.name) || g.getFieldRepetitionCount(f.name) == 0) null
+      else f.dataType match {
+        case StringType => g.getString(f.name, 0)
+        case LongType => g.getLong(f.name, 0)
+      }
+    })
+  }
+}

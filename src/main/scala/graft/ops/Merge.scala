@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
   * (`copyTempTablesDataToWriteTable`, src/lib/client.js:871-1118;
   * `copySafeSyncTempTablesDataToWriteTable`, src/lib/client.js:1124-1239).
   * Here each sync strategy is a pure function `(target, delta) => newState`,
-  * so the whole merge is ONE Catalyst plan: dedup window + two or three
-  * anti/semi joins, all shuffling on the same key columns — AQE broadcasts
-  * the delta side when small, and at 100 TB the target side never leaves
-  * the executors (no collect, no driver state).
+  * so the whole merge is ONE Catalyst plan: one dedup window over the
+  * staged rows + anti/semi joins on the same key columns. The key side of
+  * `delta`'s anti-join is the raw key columns of the tombstones and the
+  * staged rows (no dedup, no distinct), which Spark broadcasts when the
+  * delta is small; at 100 TB the target side never leaves the executors
+  * (no collect, no driver state).
   *
   * Column contract: `target` and `staged` share the SRI row shape
   * (href, key, modified_ms, jsondata, resourcetype[, path, baseurl]).
@@ -22,7 +24,8 @@ object Merge {
   /** deltaSync merge: apply tombstones, then upsert the staged pages.
     * Equivalent to D1 → (A1 dedup) → U1 update + I1 insert, i.e. the new
     * state is:
-    *   (target − tombstones − stagedKeys) ∪ dedup(staged − tombstones)
+    *   (target − tombstoneKeys − stagedKeys) ∪ dedup(staged)
+    * (a key both tombstoned and staged stays alive, see below).
     * Unchanged-payload rows in staged replace their target row with an
     * identical one, so P5 dead-update elimination is a physical-write
     * optimization, not a semantic difference — see
@@ -38,9 +41,12 @@ object Merge {
     // then re-created within the window) — staged wins, not the tombstone.
     // One anti-join pass over the (big) target: rows leave either because
     // they were tombstoned or because the delta replaces them — union the
-    // two key sets rather than scanning the target twice.
+    // two key sets rather than scanning the target twice. The staged keys
+    // are taken raw: keepLatest keeps one row per key, so the key set is
+    // the same, and a left-anti join ignores duplicate build keys, so
+    // neither a dedup nor a distinct runs before the broadcast.
     val excluded = tombstones.select(keys.map(col): _*)
-      .unionByName(deduped.select(keys.map(col): _*)).distinct()
+      .unionByName(staged.select(keys.map(col): _*))
     target.join(excluded, keys, "left_anti").unionByName(deduped)
   }
 

@@ -9,9 +9,10 @@ import org.apache.spark.sql.types._
   * The watermark is driver-side scalar state (a single epoch-millis Long per
   * (table, baseurl, path, synctype)), exactly as in the reference's
   * `sri2db_synctimes` table — it is deliberately NOT contorted into the
-  * dataflow plan (SURVEY §7.3 risk 3). The only distributed piece is the
-  * running max over the staged snapshot (A2), which is a partial-agg
-  * `max()` — one map-side combine, one tiny shuffle.
+  * dataflow plan (SURVEY §7.3 risk 3). Its state table (S6/W5) is read and
+  * written on the driver, with no Spark job. The only distributed piece is
+  * the max `modified` over the staged snapshot (A2), which the runner
+  * observes on the merge write it already runs.
   */
 object Watermark {
 
@@ -67,8 +68,8 @@ object Watermark {
   // ---- S6/W5: state persisted as a tiny parquet table ----
 
   /** The state table's layout, one row per (tablename, synctype); shared by
-    * [[readState]] and [[writeState]] so neither infers it from the files
-    * (an inference is a Spark job of its own). */
+    * [[readState]] and [[writeState]]. State directories Spark's own
+    * Parquet writer produced (snappy part files) read back the same way. */
   val StateSchema: StructType = StructType(Seq(
     StructField("tablename", StringType),
     StructField("baseurl", StringType),
@@ -78,42 +79,47 @@ object Watermark {
     StructField("syncstart", LongType)))
 
   /** Read sync state for a key; None on cold start
-    * (reference: getLastSyncDates, src/lib/client.js:614-699). A state row
-    * whose `lastmodified` or `syncstart` reads as null (files written in
-    * another layout) fails naming `statePath`: a null watermark must not
-    * pass for a value or a cold start. */
+    * (reference: getLastSyncDates, src/lib/client.js:614-699). The state
+    * holds O(#sync streams) rows, so it is read on the driver
+    * ([[DriverParquet]]): no Spark job. A state row whose `lastmodified` or
+    * `syncstart` reads as null (files written in another layout) fails
+    * naming `statePath`: a null watermark must not pass for a value or a
+    * cold start. */
   def readState(spark: SparkSession, statePath: String, tablename: String,
                 synctype: String): Option[graft.SyncState] = {
     // a crash between the two renames of writeState parks the state at
     // .bak; reading past it would cold-start the next deltaSync from 1900
     if (!AtomicDir.restore(statePath)) return None
-    val rows = spark.read.schema(StateSchema).parquet(statePath)
-      .where(col("tablename") === tablename && col("synctype") === synctype)
-      .select("lastmodified", "syncstart").limit(1).collect()
-    rows.headOption.map { r =>
-      if (r.isNullAt(0) || r.isNullAt(1))
+    stateRows(spark, statePath).find(isKey(_, tablename, synctype)).map { r =>
+      if (r.isNullAt(4) || r.isNullAt(5))
         throw new IllegalStateException(s"sync state at $statePath has a " +
           s"null lastmodified or syncstart for ($tablename, $synctype): " +
           s"its layout differs from ${StateSchema.simpleString}")
-      graft.SyncState(r.getLong(0), r.getLong(1))
+      graft.SyncState(r.getLong(4), r.getLong(5))
     }
   }
 
   /** Upsert the single state row (reference does DELETE+INSERT,
     * src/lib/client.js:709-760). Parquet has no in-place update; rewrite
-    * the (tiny) state table — at scale this stays O(#sync-streams). */
+    * the (tiny) state table on the driver, no Spark job — at scale this
+    * stays O(#sync-streams). */
   def writeState(spark: SparkSession, statePath: String, tablename: String,
                  synctype: String, st: graft.SyncState): Unit = {
-    val row = spark.createDataFrame(java.util.List.of(Row(tablename, null,
-      null, synctype, st.lastModified, st.syncStart)), StateSchema)
-    val merged =
-      if (!new java.io.File(statePath).exists()) row
-      else spark.read.schema(StateSchema).parquet(statePath)
-        .where(!(col("tablename") === tablename && col("synctype") === synctype))
-        .unionByName(row).coalesce(1)
-    merged.write.mode("overwrite").parquet(statePath + ".tmp")
+    val kept =
+      if (!new java.io.File(statePath).exists()) Nil
+      else stateRows(spark, statePath).filterNot(isKey(_, tablename, synctype))
+    DriverParquet.writeRows(spark.sparkContext.hadoopConfiguration,
+      statePath + ".tmp", StateSchema,
+      kept :+ Row(tablename, null, null, synctype, st.lastModified, st.syncStart))
     // a failed rename must not silently lose the watermark — losing it
     // falls back to a cold-start re-sync from 1900
     AtomicDir.swap(statePath + ".tmp", statePath)
   }
+
+  private def stateRows(spark: SparkSession, statePath: String): Seq[Row] =
+    DriverParquet.readRows(spark.sparkContext.hadoopConfiguration, statePath,
+      StateSchema)
+
+  private def isKey(r: Row, tablename: String, synctype: String): Boolean =
+    r.getString(0) == tablename && r.getString(3) == synctype
 }

@@ -1,9 +1,10 @@
 package graft.runner
 
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -30,10 +31,15 @@ trait TargetTable {
 
 /** Parquet-directory target with write-temp-then-rename atomicity.
   * At cluster scale the rename becomes a metastore/table-format commit
-  * (Iceberg/Delta); the runner contract is unchanged. */
+  * (Iceberg/Delta); the runner contract is unchanged. `read` takes the
+  * schema Spark stored in a data file's footer, read on the driver, so it
+  * starts no schema-inference job; a target with no data file or no Spark
+  * schema in its footer fails naming the path. */
 final class ParquetTarget(spark: SparkSession, path: String) extends TargetTable {
   override def exists: Boolean = AtomicDir.restore(path)
-  override def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  override def read(spark: SparkSession): DataFrame = spark.read
+    .schema(DriverParquet.sparkSchema(spark.sparkContext.hadoopConfiguration, path))
+    .parquet(path)
   override def overwrite(df: DataFrame): Unit = {
     val tmp = path + ".staging"
     df.write.mode("overwrite").parquet(tmp)
@@ -60,7 +66,8 @@ final case class SyncResult(
   * fullSync / deltaSync / safeDeltaSync compose the Merge/Diff/Watermark
   * operators into one Catalyst plan per sync, then commit target + state.
   *
-  *  - T1 watermark: read from the state table and applied as a
+  *  - T1 watermark: read from the state table (on the driver, no Spark
+  *    job) and applied as a
   *    `modified >= wm` filter on the live pass and as
   *    `modified >= wm OR modified IS NULL` on the tombstone pass (when the
   *    tombstones carry the modified column). On parquet this prunes row
@@ -69,13 +76,17 @@ final case class SyncResult(
   *    watermark is observed (`Dataset.observe`) as the max `modified` of
   *    the staged rows the committed write consumed, and the row count
   *    after the sync is observed on that write too: a sync makes no
-  *    separate watermark query and never re-reads the target.
+  *    separate watermark query and never re-reads the target. The metrics
+  *    are named `observe`s read by a query listener registered for the
+  *    sync only ([[Observed]]). A steady deltaSync runs 3 Spark jobs: the
+  *    broadcast of the excluded keys, the staged-side dedup shuffle, and
+  *    the target write.
   *  - T4 single-flight: a sync rejects immediately if another is running
   *    on this runner (reference: client.js:1628-1631).
   *  - T6 atomicity: target overwrite is atomic; the watermark, observed
-  *    from the committed pass, is written only after the target commit,
-  *    so a crash between the two re-syncs an overlap (at-least-once) that
-  *    A1 dedup + key merge make idempotent.
+  *    from the committed pass, is written (on the driver, no Spark job)
+  *    only after the target commit, so a crash between the two re-syncs an
+  *    overlap (at-least-once) that A1 dedup + key merge make idempotent.
   *  - dryRun: plan + compute (one count of the observed frame), skip both
   *    commits (reference README.md:69).
   */
@@ -85,26 +96,25 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
 
   /** Reference: fullSync = sync(null) (client.js:1923-1941). */
   def fullSync(source: DataFrame, target: TargetTable): SyncResult =
-    singleFlight {
+    sync { obs =>
       val t0 = now()
       val current = if (target.exists) target.read(spark) else emptyLike(source)
       val merged = Merge.full(current, source, cfg.keys, cfg.modifiedCol)
-      commit(target, merged, SyncType.Full, t0)
+      commit(target, merged, SyncType.Full, t0, obs)
     }
 
   /** Reference: deltaSync(modifiedSince?) — explicit `modifiedSince`
     * skips the watermark advance (client.js:1816, README.md:174). */
   def deltaSync(source: DataFrame, tombstones: DataFrame, target: TargetTable,
                 modifiedSince: Option[Long] = None): SyncResult =
-    singleFlight {
+    sync { obs =>
       val t0 = now()
       val prev = Watermark.readState(spark, cfg.statePath, cfg.tableName,
         SyncType.Delta)
       val since = modifiedSince.orElse(prev.map(_.lastModified))
         .getOrElse(Watermark.ColdStartMs)
-      val seen = Observation()
       val staged = Watermark.modifiedSince(source, since, cfg.modifiedCol)
-        .observe(seen, max(col(cfg.modifiedCol)).as("max"))
+        .observe(obs.name("max"), max(col(cfg.modifiedCol)).as("max"))
       // the tombstone pass is watermark-fenced too (reference applies
       // modifiedSince to the deleted-resources query, client.js:1684-1694);
       // rows without a modified column/value are kept conservatively
@@ -116,11 +126,11 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
       val current = if (target.exists) target.read(spark) else emptyLike(source)
       val merged = Merge.delta(current, staged, tombsFenced, cfg.keys,
         cfg.modifiedCol)
-      val res = commit(target, merged, SyncType.Delta, t0)
+      val res = commit(target, merged, SyncType.Delta, t0, obs)
       if (modifiedSince.isEmpty && !cfg.dryRun) {
         val t1 = now()
-        // completed by the write that completed the commit's row count
-        val wm = Watermark.advance(observed[Long](seen, "max"),
+        // observed by the write that carried the commit's row count
+        val wm = Watermark.advance(obs.value[Long]("max"),
           prev.map(_.lastModified).getOrElse(Watermark.ColdStartMs),
           prev.map(_.syncStart), t0, t1)
         Watermark.writeState(spark, cfg.statePath, cfg.tableName,
@@ -136,7 +146,7 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
                     members: DataFrame,
                     fetchMissing: DataFrame => DataFrame,
                     target: TargetTable): SyncResult =
-    singleFlight {
+    sync { obs =>
       val t0 = now()
       val current = if (target.exists) target.read(spark) else emptyLike(source)
       val afterDelta = Merge.delta(current, source, tombstones, cfg.keys,
@@ -145,43 +155,42 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
       val fetched = fetchMissing(missing) // S2 keyed batch fetch
       val merged = Merge.safe(afterDelta, members, fetched, cfg.keys,
         cfg.modifiedCol)
-      commit(target, merged, SyncType.SafeDelta, t0)
+      commit(target, merged, SyncType.SafeDelta, t0, obs)
     }
 
   // ---- internals ----
 
-  private def singleFlight[A](body: => A): A = {
+  /** Single-flight (T4) around `body`, with the sync's [[Observed]]
+    * listener registered for its duration. */
+  private def sync[A](body: SyncRunner.Observed => A): A = {
     if (!running.compareAndSet(false, true))
       throw new IllegalStateException(
         s"sync already running for ${cfg.tableName} (single-flight, T4)")
-    try body finally running.set(false)
+    val obs = new SyncRunner.Observed
+    spark.listenerManager.register(obs)
+    try body(obs)
+    finally { spark.listenerManager.unregister(obs); running.set(false) }
   }
 
   /** Run `merged` once, through the target's write (or a count on a dry
     * run), and take the row count from that pass. */
   private def commit(target: TargetTable, merged: DataFrame, syncType: String,
-                     t0: Long): SyncResult = {
-    val rows = Observation()
-    val observedMerged = merged.observe(rows, count(lit(1)).as("rows"))
+                     t0: Long, obs: SyncRunner.Observed): SyncResult = {
+    val observedMerged = merged.observe(obs.name("rows"), count(lit(1)).as("rows"))
     val rowsAfter =
       if (cfg.dryRun) observedMerged.count()
       else {
         target.overwrite(observedMerged)
-        if (!rows.future.isCompleted) SyncRunner.awaitQueryListeners(spark)
-        if (!rows.future.isCompleted)
+        if (!obs.has("rows")) SyncRunner.awaitQueryListeners(spark)
+        if (!obs.has("rows"))
           throw new IllegalStateException(s"$target: overwrite returned " +
             "without running the merged rows through a Spark action, so the " +
             "sync observed no row count or watermark (TargetTable.overwrite)")
         // no value only when the optimizer pruned the frame as empty
-        observed[Long](rows, "rows").getOrElse(0L)
+        obs.value[Long]("rows").getOrElse(0L)
       }
     SyncResult(syncType, rowsAfter, None, now() - t0)
   }
-
-  /** A completed observation's value; None when it is null (no rows) or
-    * missing (the optimizer pruned the observed frame as empty). */
-  private def observed[A](o: Observation, name: String): Option[A] =
-    o.get.get(name).flatMap(v => Option(v.asInstanceOf[A]))
 
   private def emptyLike(df: DataFrame): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -192,8 +201,49 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
 
 object SyncRunner {
 
-  /** Blocks until the session's query listeners, which complete every
-    * `Observation`, have handled each query that ended before this call.
+  /** The metrics of one sync's named `observe`s, taken from each query the
+    * session runs successfully while it is registered. Spark's own
+    * `Observation` would register a session-wide listener that asks every
+    * later failed query for its metrics, logging an error stack for each
+    * one that failed analysis; this listener lives for one sync and reads
+    * successful queries only. */
+  private[graft] final class Observed extends QueryExecutionListener {
+    private val prefix =
+      s"sync_${java.util.UUID.randomUUID().toString.replace("-", "")}_"
+    // one query's metrics land at once: the watermark is read as soon as
+    // the row count is there, and both come from the same write
+    private val got = new AtomicReference(Map.empty[String, Row])
+
+    /** The plan-wide name of this sync's metric `metric`. */
+    def name(metric: String): String = prefix + metric
+
+    /** Whether a finished query ran (or pruned) the frame observed as
+      * `metric`. */
+    def has(metric: String): Boolean = got.get.contains(name(metric))
+
+    /** The observed value; None when it is null (no rows), missing (the
+      * optimizer pruned the observed frame as empty) or not observed. */
+    def value[A](metric: String): Option[A] =
+      got.get.get(name(metric)).filter(_.length > 0)
+        .flatMap(r => Option(r.get(0).asInstanceOf[A]))
+
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+      // walk the query's logical plan, as Spark's own Observation does: a
+      // frame the optimizer pruned away still reports, with no value
+      val ours = qe.logical.collect {
+        case c: CollectMetrics if c.name.startsWith(prefix) => c.name
+      }
+      if (ours.nonEmpty) {
+        val metrics = qe.observedMetrics
+        got.updateAndGet(_ ++ ours.map(n => n -> metrics.getOrElse(n, Row.empty)))
+      }
+    }
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
+  /** Blocks until the session's query listeners, which read every sync's
+    * observed metrics ([[Observed]]), have handled each query that ended
+    * before this call.
     * They hear of queries in the order the queries end, so a marker query
     * run now (it plans over an empty local relation and starts no Spark
     * job) is handled after all of them. */
@@ -204,7 +254,9 @@ object SyncRunner {
       private def check(qe: QueryExecution): Unit =
         if (qe.analyzed.output.exists(_.name == name)) handled.trySuccess(())
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = check(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = check(qe)
+      // a query that failed analysis has no analyzed plan to ask
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        scala.util.Try(check(qe))
     }
     spark.listenerManager.register(listener)
     try {

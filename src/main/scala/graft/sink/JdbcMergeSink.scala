@@ -51,6 +51,14 @@ object JdbcMergeSink {
       batchSize: Int = 10000,
       properties: java.util.Properties = new java.util.Properties())
 
+  /** The `executeUpdate` row counts of one merge transaction: tombstoned
+    * rows deleted (D1), rows pruned as absent from the snapshot (D2) or
+    * from the member list (safe-sync), rows updated (U1, changed payloads
+    * only) and rows inserted (I1) — the reference's per-action DML counts
+    * (client.js:983-994, A5). */
+  final case class MergeCounts(deleted: Int, pruned: Int, updated: Int,
+                               inserted: Int)
+
   // ---- SQL generation (pure, unit-tested) ----
 
   private def keyEq(l: String, r: String, keys: Seq[String]): String =
@@ -222,29 +230,33 @@ object JdbcMergeSink {
     }
   }
 
-  /** Run the merge + state statements in one driver-side transaction. */
+  /** Run the merge + state statements in one driver-side transaction;
+    * returns the committed statements' row counts. */
   def mergeAndCommit(c: SinkConfig, cols: Seq[String],
                      deletesTable: Option[String],
                      state: Option[(String, String, Long, Long)],
                      connFactory: () => Connection =
-                       () => DriverManager.getConnection(null: String)): Unit = {
+                       () => DriverManager.getConnection(null: String)): MergeCounts = {
     val conn = connFactory()
     try {
       conn.setAutoCommit(false)
       val st = conn.createStatement()
-      deletesTable.foreach(d => st.executeUpdate(deleteSql(c, d)))
-      if (c.fullSync && !c.preferUpdatesOverInserts) {
-        st.executeUpdate(s"DELETE FROM ${c.table}")
-      } else if (c.fullSync) {
-        st.executeUpdate(pruneSql(c))
-      }
-      if (!c.fullSync || c.preferUpdatesOverInserts)
-        st.executeUpdate(updateSql(c))
-      st.executeUpdate(insertSql(c, cols))
+      val deleted = deletesTable.map(d => st.executeUpdate(deleteSql(c, d)))
+        .getOrElse(0)
+      val pruned =
+        if (c.fullSync && !c.preferUpdatesOverInserts)
+          st.executeUpdate(s"DELETE FROM ${c.table}")
+        else if (c.fullSync) st.executeUpdate(pruneSql(c))
+        else 0
+      val updated =
+        if (!c.fullSync || c.preferUpdatesOverInserts) st.executeUpdate(updateSql(c))
+        else 0
+      val inserted = st.executeUpdate(insertSql(c, cols))
       state.foreach { case (t, s, lm, ss) =>
         stateSql(c, t, s, lm, ss).foreach(st.executeUpdate)
       }
       conn.commit()
+      MergeCounts(deleted, pruned, updated, inserted)
     } catch {
       case e: Throwable => conn.rollback(); throw e
     } finally conn.close()
@@ -257,22 +269,24 @@ object JdbcMergeSink {
     * client.js:1124-1239; statement order delete :1186 before insert
     * :1203, same as the reference). The DataFrame-level equivalent is
     * [[graft.ops.Merge.safe]]; `JdbcLiveSpec` pins this arm to that
-    * answer on shared fixtures. */
+    * answer on shared fixtures. Returns the rows pruned (not members) and
+    * inserted. */
   def safeSyncAndCommit(c: SinkConfig, cols: Seq[String],
                         membersTable: String, insertsTable: String,
                         state: Option[(String, String, Long, Long)],
                         connFactory: () => Connection =
-                          () => DriverManager.getConnection(null: String)): Unit = {
+                          () => DriverManager.getConnection(null: String)): MergeCounts = {
     val conn = connFactory()
     try {
       conn.setAutoCommit(false)
       val st = conn.createStatement()
-      st.executeUpdate(safeDeleteSql(c, membersTable))
-      st.executeUpdate(safeInsertSql(c, cols, insertsTable))
+      val pruned = st.executeUpdate(safeDeleteSql(c, membersTable))
+      val inserted = st.executeUpdate(safeInsertSql(c, cols, insertsTable))
       state.foreach { case (t, s, lm, ss) =>
         stateSql(c, t, s, lm, ss).foreach(st.executeUpdate)
       }
       conn.commit()
+      MergeCounts(deleted = 0, pruned = pruned, updated = 0, inserted = inserted)
     } catch {
       case e: Throwable => conn.rollback(); throw e
     } finally conn.close()

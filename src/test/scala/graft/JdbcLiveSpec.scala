@@ -2,7 +2,7 @@ package graft
 
 import java.sql.DriverManager
 import graft.sink.JdbcMergeSink
-import graft.sink.JdbcMergeSink.{Derby, SinkConfig}
+import graft.sink.JdbcMergeSink.{Derby, MergeCounts, SinkConfig}
 
 /** EXECUTED JDBC merge protocol — stage → merge → commit against an
   * embedded Derby database (the reference runs its merge inside real
@@ -206,6 +206,35 @@ class JdbcLiveSpec extends SparkSuite {
     }
     assert(queryTarget() === after,
       "rollback must leave the target exactly as it was")
+  }
+
+  test("mergeAndCommit and safeSyncAndCommit return their statements' " +
+    "row counts") {
+    freshSchema()
+    stageDelta()
+    // /r/3 tombstoned, /r/1 changed (/r/2's payload is unchanged), /r/4 new
+    assert(JdbcMergeSink.mergeAndCommit(cfg, cols, Some("deletes"), None, conn) ===
+      MergeCounts(deleted = 1, pruned = 0, updated = 1, inserted = 1))
+    // the replay finds nothing left to do
+    exec("TRUNCATE TABLE staging")
+    stageDelta()
+    assert(JdbcMergeSink.mergeAndCommit(cfg, cols, Some("deletes"), None, conn) ===
+      MergeCounts(deleted = 0, pruned = 0, updated = 0, inserted = 0))
+    // fullSync keeping existing rows: /r/3 is absent from the snapshot
+    freshSchema()
+    stageDelta()
+    assert(JdbcMergeSink.mergeAndCommit(cfg.copy(fullSync = true), cols, None,
+      None, conn) === MergeCounts(deleted = 0, pruned = 1, updated = 1, inserted = 1))
+    // fullSync replacing every row: all three go, all three staged come in
+    freshSchema()
+    stageDelta()
+    assert(JdbcMergeSink.mergeAndCommit(cfg.copy(fullSync = true,
+      preferUpdatesOverInserts = false), cols, None, None, conn) ===
+      MergeCounts(deleted = 0, pruned = 3, updated = 0, inserted = 3))
+    // safe sync: /r/3 is not a member, /r/5 is fetched
+    safeFixtures()
+    assert(JdbcMergeSink.safeSyncAndCommit(cfg, cols, "members", "missing",
+      None, conn) === MergeCounts(deleted = 0, pruned = 1, updated = 0, inserted = 1))
   }
 
   test("derby dialect SQL text is well-formed for every statement") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
@@ -50,6 +50,42 @@ class MergeSpec extends SparkSuite {
     // a tombstone with no matching staged row still deletes
     val out2 = Merge.delta(target, staged.where(lit(false)), tombs)
     assert(out2.count() === 0)
+  }
+
+  test("delta merge over the raw excluded keys returns the rows of the " +
+    "deduped-distinct formula (duplicate and null keys, overlapping tombstones)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def key(): String = if (rnd.nextInt(8) == 0) null else s"/k/${rnd.nextInt(25)}"
+    def rows(n: Int): DataFrame = Seq.fill(n)((key(), rnd.nextInt(4).toLong,
+      s"p${rnd.nextInt(3)}")).toDF("href", "modified_ms", "jsondata")
+    // the excluded side before it was taken raw: deduped, then distinct
+    def oldDelta(target: DataFrame, staged: DataFrame, tombs: DataFrame) = {
+      val deduped = Dedup.keepLatest(staged)
+      val excluded = tombs.select("href")
+        .unionByName(deduped.select("href")).distinct()
+      target.join(excluded, Seq("href"), "left_anti").unionByName(deduped)
+    }
+    def sorted(df: DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).sorted.toSeq
+    val cases = Seq.fill(6) {
+      val staged = rows(30)
+      // duplicate tombstones, some also staged, some null
+      val tombs = rows(12).select("href").unionByName(staged.select("href").limit(4))
+      (rows(40), staged, tombs)
+    }
+    def check(join: String): Unit = cases.foreach { case (target, staged, tombs) =>
+      val got = Merge.delta(target, staged, tombs)
+      assert(sorted(got) === sorted(oldDelta(target, staged, tombs)))
+      assert(got.queryExecution.executedPlan.toString.contains(join),
+        got.queryExecution.executedPlan)
+    }
+    check("BroadcastHashJoin")
+    val key0 = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key0)
+    spark.conf.set(key0, "-1")
+    try check("SortMergeJoin")
+    finally before.fold(spark.conf.unset(key0))(spark.conf.set(key0, _))
   }
 
   test("keepLatest keeps the max-modified row, not an arbitrary one") {
@@ -125,6 +161,27 @@ class MergeSpec extends SparkSuite {
     def shape(s: org.apache.spark.sql.types.StructType) =
       s.fields.map(f => f.name -> f.dataType).toSeq
     assert(shape(spark.read.parquet(tmp).schema) === shape(Watermark.StateSchema))
+  }
+
+  test("a state directory written by Spark's parquet writer reads back and " +
+    "is rewritten on the driver") {
+    val tmp = java.nio.file.Files.createTempDirectory("wm").toString + "/state"
+    spark.createDataFrame(java.util.List.of(
+        Row("t1", null, null, SyncType.Delta, 42L, 7L),
+        Row("t2", "http://x", "/p", SyncType.Delta, 43L, 8L)),
+        Watermark.StateSchema)
+      .coalesce(1).write.parquet(tmp)
+    val names = new java.io.File(tmp).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.exists(_.endsWith(".snappy.parquet")), names)
+    assert(Watermark.readState(spark, tmp, "t1", SyncType.Delta)
+      .contains(SyncState(42L, 7L)))
+    Watermark.writeState(spark, tmp, "t1", SyncType.Delta, SyncState(44L, 9L))
+    assert(Watermark.readState(spark, tmp, "t1", SyncType.Delta)
+      .contains(SyncState(44L, 9L)))
+    // the other stream's row is kept whole, baseurl and path included
+    assert(spark.read.parquet(tmp).where(col("tablename") === "t2").collect()
+      .map(_.toSeq) === Array(Seq("t2", "http://x", "/p", SyncType.Delta, 43L, 8L)))
   }
 
   test("a state file missing syncstart fails naming the state path") {

@@ -283,27 +283,93 @@ class RunnerSpec extends SparkSuite {
       case _ => Nil
     }
 
-  test("a steady deltaSync runs 8 Spark jobs and never re-reads the target " +
+  test("a steady deltaSync runs 3 Spark jobs and never re-reads the target " +
     "after its write") {
     val opts = steadyPages()
     val table = new java.io.File(opts("target")).getCanonicalPath
     val queries = new ConcurrentLinkedQueue[QueryExecution]()
     val (jobs, r) = jobsOf(withQueryListener(queries.add(_))(Main.run(spark, opts)))
-    // parent commit: 16 jobs (readState and writeState inferred the state
-    // schema, the watermark was a query of its own, and the written target
-    // was read back for its count)
-    assert(jobs === 8, s"jobs of one steady deltaSync")
+    // the broadcast of the excluded keys (tombstone and staged keys, raw),
+    // the staged-side dedup shuffle, and the target write; the state and
+    // the target's schema are read and written on the driver
+    assert(jobs === 3, s"jobs of one steady deltaSync")
     val qs = queries.asScala.toSeq
     val write = qs.indexWhere(_.analyzed.collectFirst {
       case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
         if c.outputPath.toUri.getPath == table + ".staging" => c
     }.isDefined)
     assert(write >= 0, qs.map(_.analyzed.nodeName))
+    // the state is written on the driver: no query reads the target after
     val after = qs.drop(write + 1)
-    // the state write (and the read of the rows it keeps) only
-    assert(after.nonEmpty && after.forall(q =>
-      !readsPaths(q).contains(table)), after.map(readsPaths))
+    assert(after.forall(q => !readsPaths(q).contains(table)),
+      after.map(readsPaths))
     assert(r.rowsAfter === spark.read.parquet(opts("target")).count())
+  }
+
+  test("ParquetTarget.read, readState and writeState start no Spark job") {
+    val opts = steadyPages()
+    val target = new ParquetTarget(spark, opts("target"))
+    val (readJobs, df) = jobsOf(target.read(spark))
+    assert(readJobs === 0, "jobs of ParquetTarget.read")
+    assert(df.schema === spark.read.parquet(opts("target")).schema)
+    val (stateJobs, st) = jobsOf {
+      val st = ops.Watermark.readState(spark, opts("state"), "things",
+        SyncType.Delta).get
+      ops.Watermark.writeState(spark, opts("state"), "things", SyncType.Delta,
+        SyncState(st.lastModified + 1, st.syncStart))
+      st
+    }
+    assert(stateJobs === 0, "jobs of readState and writeState")
+    assert(ops.Watermark.readState(spark, opts("state"), "things",
+      SyncType.Delta).contains(SyncState(st.lastModified + 1, st.syncStart)))
+    // Spark reads the driver-written state as StateSchema
+    assert(spark.read.parquet(opts("state")).schema ===
+      ops.Watermark.StateSchema)
+  }
+
+  test("ParquetTarget.read fails naming the path when there is no data file " +
+    "or no Spark schema in its footer") {
+    val base = tmpDir()
+    val empty = new java.io.File(s"$base/empty"); empty.mkdirs()
+    val e1 = intercept[IllegalStateException](
+      new ParquetTarget(spark, empty.getPath).read(spark))
+    assert(e1.getMessage.contains(empty.getPath), e1.getMessage)
+    // a Parquet file another writer made, with no Spark schema
+    val foreign = s"$base/foreign"
+    val msg = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { required int64 id; }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$foreign/part-0.parquet"))
+      .withType(msg).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroup(msg)
+      .append("id", 1L))
+    finally w.close()
+    val e2 = intercept[IllegalStateException](
+      new ParquetTarget(spark, foreign).read(spark))
+    assert(e2.getMessage.contains(foreign), e2.getMessage)
+  }
+
+  test("after a sync, a query that fails analysis logs no listener error") {
+    steadyPages()
+    val errors = new ConcurrentLinkedQueue[String]()
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "sync-listener-errors", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.ERROR)
+          errors.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = org.apache.logging.log4j.LogManager.getRootLogger
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    root.addAppender(capture)
+    try {
+      intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql("select no_such_column from range(1)").collect())
+      // the listeners have handled the failed query once they handle this
+      SyncRunner.awaitQueryListeners(spark)
+    } finally { root.removeAppender(capture); capture.stop() }
+    assert(!errors.asScala.exists(_.contains("ExecutionListenerBus")), errors)
   }
 
   test("rowsAfter and the watermark come from the committed pass") {
