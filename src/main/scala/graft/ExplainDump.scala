@@ -192,12 +192,13 @@ object ExplainDump {
         "exchanges are the per-doc window partition and the final " +
         "fingerprint join-back."),
     "emb_kmeans" ->
-      ("Integer Lloyd's k-means: every round's assignment is the corpus " +
-        "× a BroadcastNestedLoopJoin over the k-row pinned codebook, " +
-        "argmin as min(struct) — a partial-then-final hash aggregate, " +
-        "never a sort window; the update's (cell, dim) sums collapse " +
-        "map-side. Nothing in the plan scales with corpus size except " +
-        "the scan itself — the codebook is KB-sized at any k·d."),
+      ("Integer Lloyd's k-means: the k-row codebook is driver-held, so " +
+        "the assignment is a map-only projection — `nearest_cell` loops " +
+        "over the centroids as one plan literal, with no join, no " +
+        "exchange on vec_id and no sort window; each round's (cell, dim) " +
+        "sums collapse map-side and are collected. Nothing in the plan " +
+        "scales with corpus size except the scan itself — the codebook " +
+        "is KB-sized at any k·d."),
     "sim_pq_topk" ->
       ("ADC serving: the probe distance table broadcasts into the " +
         "cell-keyed code join; the corpus side carries only (vec_id, " +

@@ -268,6 +268,141 @@ case class DotProductLL(left: Expression, right: Expression)
   override def prettyName: String = "dot_ll"
 }
 
+/** Exact integer nearest cell of an array<bigint> vector among a FIXED
+  * cell set — the assignment step of the integer k-means / PQ trainers
+  * ([[graft.ops.Similarity]]), evaluated per row with no join and no
+  * shuffle. `cells` is a foldable array<struct<cell: bigint, c_emb:
+  * array<bigint>, c_norm: bigint>> (the driver-held model as ONE
+  * literal); the result is struct<dist2, cell> minimizing
+  * dist2 = q_norm − 2·⟨q, c_emb⟩ + c_norm, ties to the smaller cell —
+  * the same integers [[DotProductLL]] would give, so the argmin is
+  * engine-exact. The cells are scanned in a generated loop over
+  * primitive arrays (not unrolled, so k does not grow the generated
+  * method). Null when q or q_norm is null, an element of q is null, q's
+  * length differs from a cell's, or there are no cells. */
+case class NearestCell(q: Expression, qNorm: Expression, cells: Expression)
+    extends TernaryExpression {
+  override def first: Expression = q
+  override def second: Expression = qNorm
+  override def third: Expression = cells
+  override def dataType: DataType = StructType(Seq(
+    StructField("dist2", LongType, nullable = false),
+    StructField("cell", LongType, nullable = false)))
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val qOk = q.dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }
+    val cellsOk = cells.dataType match {
+      case ArrayType(StructType(Array(StructField(_, LongType, _, _),
+          StructField(_, ArrayType(LongType, _), _, _),
+          StructField(_, LongType, _, _))), _) => true
+      case _ => false
+    }
+    if (qOk && qNorm.dataType == LongType && cellsOk && cells.foldable)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (array<bigint>, bigint, literal array<struct<" +
+        s"bigint, array<bigint>, bigint>>), got (${q.dataType.catalogString}, " +
+        s"${qNorm.dataType.catalogString}, ${cells.dataType.catalogString}" +
+        s"${if (cells.foldable) "" else " non-literal"})")
+  }
+
+  /** (ids, centroids, norms) sorted by id: scanning in id order with a
+    * strict `<` is the smaller-cell tie-break. */
+  @transient private lazy val table: (Array[Long], Array[Array[Long]], Array[Long]) = {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val a = cells.eval().asInstanceOf[ArrayData]
+    val rows = (0 until (if (a == null) 0 else a.numElements())).map { i =>
+      require(!a.isNullAt(i), s"$prettyName: null cell")
+      val r = a.getStruct(i, 3)
+      require(!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2),
+        s"$prettyName: cell $i has a null field")
+      val e = r.getArray(1)
+      require((0 until e.numElements()).forall(!e.isNullAt(_)),
+        s"$prettyName: cell ${r.getLong(0)} has a null element")
+      (r.getLong(0), e.toLongArray(), r.getLong(2))
+    }.sortBy(_._1)
+    (rows.map(_._1).toArray, rows.map(_._2).toArray, rows.map(_._3).toArray)
+  }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = q.eval(input)
+    val n = qNorm.eval(input)
+    if (v == null || n == null) null
+    else {
+      val a = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val (ids, embs, norms) = table
+      val len = a.numElements()
+      if ((0 until len).exists(a.isNullAt)) return null
+      var best = 0L
+      var bestCell = 0L
+      var c = 0
+      while (c < ids.length) {
+        val e = embs(c)
+        if (e.length != len) return null
+        var acc = 0L
+        var i = 0
+        while (i < len) { acc += a.getLong(i) * e(i); i += 1 }
+        val d = n.asInstanceOf[Long] - 2L * acc + norms(c)
+        if (c == 0 || d < best) { best = d; bestCell = ids(c) }
+        c += 1
+      }
+      if (ids.isEmpty) null
+      else org.apache.spark.sql.catalyst.InternalRow(best, bestCell)
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val (ids, embs, norms) = table
+    val idsRef = ctx.addReferenceObj("cellIds", ids, "long[]")
+    val embsRef = ctx.addReferenceObj("cellEmbs", embs, "long[][]")
+    val normsRef = ctx.addReferenceObj("cellNorms", norms, "long[]")
+    val qe = q.genCode(ctx)
+    val ne = qNorm.genCode(ctx)
+    val Seq(len, c, i, e, acc, d, best, bestCell, bad) = Seq("len", "c", "i",
+      "e", "acc", "d", "best", "bestCell", "bad").map(ctx.freshName)
+    val row = classOf[GenericInternalRow].getName
+    ev.copy(code = code"""
+      |${qe.code}
+      |${ne.code}
+      |boolean ${ev.isNull} = true;
+      |InternalRow ${ev.value} = null;
+      |if (!${qe.isNull} && !${ne.isNull} && $idsRef.length > 0) {
+      |  int $len = ${qe.value}.numElements();
+      |  boolean $bad = false;
+      |  for (int $i = 0; $i < $len; $i++) {
+      |    if (${qe.value}.isNullAt($i)) { $bad = true; break; }
+      |  }
+      |  long $best = 0L;
+      |  long $bestCell = 0L;
+      |  for (int $c = 0; $c < $idsRef.length && !$bad; $c++) {
+      |    long[] $e = $embsRef[$c];
+      |    if ($e.length != $len) { $bad = true; break; }
+      |    long $acc = 0L;
+      |    for (int $i = 0; $i < $len; $i++) {
+      |      $acc += ${qe.value}.getLong($i) * $e[$i];
+      |    }
+      |    long $d = ${ne.value} - 2L * $acc + $normsRef[$c];
+      |    if ($c == 0 || $d < $best) { $best = $d; $bestCell = $idsRef[$c]; }
+      |  }
+      |  if (!$bad) {
+      |    ${ev.isNull} = false;
+      |    ${ev.value} = new $row(new Object[] {
+      |      Long.valueOf($best), Long.valueOf($bestCell)});
+      |  }
+      |}
+      """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(a: Expression, b: Expression,
+      c: Expression): NearestCell = copy(q = a, qNorm = b, cells = c)
+  override def prettyName: String = "nearest_cell"
+}
+
 /** Z-order (Morton) interleave of the low 16 bits of two non-negative
   * longs into one clustering key: bit b of `left` lands at bit 2b, bit b
   * of `right` at bit 2b+1. Range-partitioning / sorting parquet by the key
@@ -634,6 +769,7 @@ object GraftFunctions {
     "java_string_hash" -> (es => JavaStringHash(es.head)),
     "dot_ff" -> (es => DotProductFF(es.head, es(1))),
     "dot_ll" -> (es => DotProductLL(es.head, es(1))),
+    "nearest_cell" -> (es => NearestCell(es.head, es(1), es(2))),
     "zorder16" -> (es => ZOrder16(es.head, es(1))),
     "hilbert16" -> (es => Hilbert16(es.head, es(1))),
     "block_sums" -> (es => BlockSums(es.head, es(1))),
@@ -677,6 +813,8 @@ object GraftFunctions {
     call_function("dot_ff", a, b)
   def dot_ll(a: Column, b: Column): Column =
     call_function("dot_ll", a, b)
+  def nearest_cell(q: Column, qNorm: Column, cells: Column): Column =
+    call_function("nearest_cell", q, qNorm, cells)
   def zorder16(x: Column, y: Column): Column =
     call_function("zorder16", x, y)
   def hilbert16(x: Column, y: Column): Column =

@@ -58,8 +58,8 @@ object Pipeline10Queries {
       // graded surface is the FINAL ASSIGNMENT (vec_id, cell, dist2) —
       // every vector's cell and exact integer squared distance, i.e.
       // the full trajectory compressed into its observable outcome.
-      // Per round: corpus × broadcast k-row centroids, argmin as a hash
-      // aggregate (min(struct)), update partial-aggregated map-side —
+      // Per round: a map-only argmin against the driver-held k-row
+      // centroids, update partial-aggregated map-side and collected —
       // nothing scales with corpus size but the scan.
       Similarity.kmeansInt8(sketch(s, dir), K, ITERS)
         .assign.orderBy("vec_id")
@@ -290,7 +290,7 @@ object Pipeline10Queries {
        |        FROM unnest(range(1, 65)) AS t(ii))""".stripMargin
 
   /** Assignment `ai` under centroids `ci`: exact integer dist², ties to
-    * the smaller cell — ROW_NUMBER mirrors kmAssign's min(struct). */
+    * the smaller cell — ROW_NUMBER mirrors kmAssign's argmin. */
   private[queries] def assignCte(ai: String, ci: String,
                                  src: String = "sk"): String =
     s"""$ai AS (SELECT vec_id, cell, dist2 FROM (

@@ -59,18 +59,18 @@ object Pipeline26Queries {
     "emb_pca_project" -> ((s, dir) => {
       // the read path emb_power_iter exists FOR: project every vector
       // onto the dominant eigenvector of the int8 gram — the 1-d PCA
-      // coordinate (whitening/indexing prep). The d-row eigenvector
-      // broadcasts; the projection is one narrow explode + broadcast
-      // join + keyed sum per vector — corpus-linear, shuffle on vec_id
-      // only.
+      // coordinate (whitening/indexing prep). The d-long eigenvector is
+      // driver-held, so the projection is one map-only exact dot
+      // product per vector against it as a literal — no join, no
+      // shuffle before the final sort.
       val sk = graft.ops.Similarity.quantizeInt8(
         Tables.embeddings(s, dir))
       val v = graft.ops.Similarity.powerIterInt(sk, rounds = 4)
-      sk.select(col("vec_id"), posexplode(col("q_emb")))
-        .select(col("vec_id"), (col("pos") + 1).cast("long").as("i"),
-          col("col").as("q"))
-        .join(broadcast(v), "i")
-        .groupBy("vec_id").agg(sum(col("q") * col("v")).as("proj"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+      require(v.map(_._1).toSeq == (1L to v.length.toLong),
+        "emb_pca_project: eigenvector dims must be 1..d")
+      sk.select(col("vec_id"), graft.expr.GraftFunctions.dot_ll(
+          col("q_emb"), typedlit(v.map(_._2).toSeq)).as("proj"))
         .orderBy("vec_id")
     }),
 

@@ -297,24 +297,27 @@ class PlanSpec extends SparkSuite {
         p.take(1500))
   }
 
-  test("emb_kmeans: centroids broadcast into the assignment (nested-" +
-      "loop over a k-row side), argmin is a hash aggregate — the corpus " +
-      "never sort-merge-joins or window-sorts") {
+  /** No join of any kind and no per-vector (vec_id-keyed) shuffle: the
+    * driver-held centroids reach each row as a plan literal. */
+  private def assertMapOnlyAssignment(p: String): Unit = {
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      "the assignment must not join the centroids:\n" + p.take(1500))
+    assert(!p.contains("Exchange hashpartitioning(vec_id"),
+      "the assignment must not shuffle the corpus by vec_id:\n" +
+        p.take(1500))
+  }
+
+  test("emb_kmeans: the assignment against the driver-held centroids is " +
+      "map-only (no join, no vec_id shuffle) and never window-sorts") {
     val df = q("emb_kmeans")
     df.collect() // settle AQE
     val p = plan(df)
-    // per-round assignment: corpus × broadcast k-row centroid frame
-    assert(p.contains("BroadcastNestedLoopJoin"),
-      "centroid frame must broadcast into the assignment:\n" +
-        p.take(1500))
-    assert(!p.contains("SortMergeJoin"),
-      "corpus-side shuffle join leaked into the kmeans plan:\n" +
-        p.take(1500))
-    // the per-vector argmin is min(struct(...)) — a hash aggregate,
-    // never a row_number window (which would sort every partition)
+    assertMapOnlyAssignment(p)
+    // the per-vector argmin is one generated loop over the cells, never
+    // a row_number window (which would sort every partition)
     assert(!p.contains("RunningWindowFunction") &&
       !p.contains("Window"),
-      "argmin must be a hash aggregate, not a sort window:\n" +
+      "argmin must not be a sort window:\n" +
         p.take(1500))
   }
 
@@ -577,7 +580,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("centroidStats: the (cell, d) sums partial-aggregate map-side " +
-      "before the exchange; centroids broadcast into the assignment") {
+      "before the exchange; the assignment is map-only") {
     val sk = graft.ops.Similarity.quantizeInt8(
       Tables.embeddings(spark, sfDir))
     val cent = graft.ops.Similarity.kmeansInt8(sk, k = 4, iters = 1)
@@ -585,9 +588,7 @@ class PlanSpec extends SparkSuite {
     val df = graft.ops.Similarity.centroidStats(sk, cent)
     df.collect() // settle AQE
     val p = plan(df)
-    assert(p.contains("BroadcastNestedLoopJoin"),
-      "k-row centroid frame must broadcast into the argmin:\n" +
-        p.take(1500))
+    assertMapOnlyAssignment(p)
     assert(p.contains("partial_sum") || p.contains("Partial"),
       "(cell, d) sums must partial-aggregate before the exchange:\n" +
         p.take(1500))

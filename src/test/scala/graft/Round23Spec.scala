@@ -145,6 +145,28 @@ class Round23Spec extends SparkSuite {
     assert(e.getMessage.contains("overflow"))
   }
 
+  test("powerIterFromGram on an empty gram fails loudly, naming the " +
+      "empty gram") {
+    val empty = spark.range(0).select(col("id").as("i"), col("id").as("j"),
+      col("id").as("gram"))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.powerIterFromGram(empty, rounds = 2)
+    }
+    assert(e.getMessage.contains("gram is empty"), e.getMessage)
+  }
+
+  test("kmeansInt8 and pqTrainInt8 on an empty sketch return an empty " +
+      "model and an empty assignment") {
+    val none = sk.where(lit(false))
+    val km = Similarity.kmeansInt8(none, k = 3, iters = 2)
+    assert(km.centroids.count() === 0 && km.assign.count() === 0)
+    assert(km.assign.columns.toSeq === Seq("vec_id", "cell", "dist2"))
+    val pq = Similarity.pqTrainInt8(none, m = 2, ksub = 3, iters = 2,
+      dims = 4)
+    assert(pq.codebook.count() === 0 && pq.codes.count() === 0)
+    assert(pq.codes.columns.toSeq === Seq("vec_id", "sub", "code", "dist2"))
+  }
+
   test("errEval closed forms: hits at ranks 1 and 3 score " +
       "1290240 + 215040; a missed list scores 0 with n_rel intact") {
     val ranked = Seq(

@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
-import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -246,34 +245,6 @@ class RunnerSpec extends SparkSuite {
     spark.listenerManager.register(l)
     try { val out = body; SyncRunner.awaitQueryListeners(spark); out }
     finally spark.listenerManager.unregister(l)
-  }
-
-  /** The Spark jobs `body` starts from this thread, counted by a listener
-    * (job group), then `body`'s result. A marker job started afterwards
-    * tells when the listener has seen them all. */
-  private def jobsOf[A](body: => A): (Int, A) = {
-    val sc = spark.sparkContext
-    val group = "jobs_" + java.util.UUID.randomUUID()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val seen = Promise[Unit]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == group)
-            seen.trySuccess(())
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = body
-      sc.setJobDescription(group)
-      sc.parallelize(Seq(1), 1).count()
-      Await.result(seen.future, 1.minute)
-      (jobs.get, out)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
   }
 
   /** Directories a query reads through file relations. */

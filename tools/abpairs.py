@@ -11,7 +11,10 @@ machine's load falls on both sides. Then prints, per end-to-end metric of
 CHANGE_DIR/BENCHMARK.json: each side's median and quartiles (IQR), the
 change's relative move, how many pairs the change won (better in the
 metric's direction), and whether the median gap exceeds the parent's IQR;
-and the failed/attempted operation totals of each side. Each run's
+and the failed/attempted operation totals of each side. For a workload
+whose runs report per-query lines on stderr (`<q>: <s> s, <rows> rows,
+<jobs> jobs`, as ops_sf001 does), it also prints, per query and per side,
+the median wall time over every pass of every run and the job counts seen. Each run's
 per-round GET and job counts, flags and failed checks go to stderr. A run
 that exits non-zero counts as a failed pair and is reported, not retried.
 
@@ -20,6 +23,7 @@ Each checkout builds its own `.bench_build/` on its first run.
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -37,9 +41,13 @@ def seeds(spec):
 # and failed checks
 RELAY = ("per round", "FLAG", "FAILED")
 
+# a run's per-query stderr line: "<q>: <s> s, <rows> rows, <jobs> jobs"
+QUERY_LINE = re.compile(r"\b(\w+): ([0-9.]+) s, \d+ rows, (\d+) jobs")
+
 
 def run_once(checkout, workload, seed, seconds):
-    """The result object of one run, or None when the run failed; relays
+    """The result object of one run, or None when the run failed, with the
+    run's per-query (query, seconds, jobs) lines under "queries"; relays
     the run's notable stderr lines."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
@@ -52,7 +60,30 @@ def run_once(checkout, workload, seed, seconds):
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-2000:])
         return None
-    return json.loads(lines[-1])
+    r = json.loads(lines[-1])
+    r["queries"] = [(m.group(1), float(m.group(2)), int(m.group(3)))
+                    for m in map(QUERY_LINE.search, p.stderr.splitlines()) if m]
+    return r
+
+
+def per_query(pairs):
+    """Per query and side: median wall time over all passes, and the job
+    counts seen (one number when every pass agrees)."""
+    rows = {}
+    for _, got in pairs:
+        for side, r in got.items():
+            for q, secs, jobs in (r or {}).get("queries", []):
+                t, j = rows.setdefault(q, {}).setdefault(side, ([], set()))
+                t.append(secs)
+                j.add(jobs)
+    for q, by in rows.items():
+        cells = []
+        for side in ("parent", "change"):
+            t, j = by.get(side, ([], set()))
+            jobs = "-".join(str(x) for x in sorted({min(j), max(j)})) if j else "?"
+            med = f"{statistics.median(t):.3f} s" if t else "?"
+            cells.append(f"{side} {med}, {jobs} jobs")
+        print(f"    {q}: {'; '.join(cells)}")
 
 
 def quartiles(xs):
@@ -113,6 +144,9 @@ def main():
         print(f"  {s}: failed {sum(r['failed'] for r in rs)} / attempted "
               f"{sum(r['attempted'] for r in rs)} operations, "
               f"{failed_runs} failed runs")
+    if any(g[s] and g[s]["queries"] for _, g in pairs for s in sides):
+        print("  per query (median wall time over all passes, job counts):")
+        per_query(pairs)
 
 
 if __name__ == "__main__":
