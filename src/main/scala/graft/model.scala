@@ -1,61 +1,13 @@
 package graft
 
-import org.apache.spark.sql.types._
-
-/** Core data model of the engine.
+/** Sync-state value: epoch-millis watermark + sync-start stamp
+  * (reference: src/lib/client.js:614-699 `getLastSyncDates`).
   *
-  * Mirrors the SRI resource/row model of the reference
-  * (reference: src/lib/client.js:335-342 row construction;
-  * docker/postgres_initdb/initdb.sql:2-11 table layout) re-expressed as a
-  * Spark schema. A synced table row is a fixed core vocabulary
-  * (href, key, modified, jsondata) plus optional disambiguator columns
-  * (resourcetype, path, baseurl) — reference: README.md:252-271.
-  *
-  * `modified` is carried as epoch-millis LongType rather than TimestampType:
-  * the reference's own state store uses epoch-millis bigints
+  * The watermark is carried as epoch-millis rather than a timestamp: the
+  * reference's own state store uses epoch-millis bigints
   * (reference: src/lib/client.js:725-726), and a Long sorts/compares
   * identically across engines, which keeps the DuckDB oracle hash-stable.
   */
-final case class SriRow(
-    href: String,
-    key: String,
-    modified_ms: Long,
-    jsondata: String,
-    resourcetype: Option[String],
-    path: Option[String],
-    baseurl: Option[String])
-
-object SriSchema {
-  /** Full 7-column layout (`sri2db_large`, initdb.sql:2). */
-  val full: StructType = StructType(Seq(
-    StructField("href", StringType, nullable = false),
-    StructField("key", StringType, nullable = true),
-    StructField("modified_ms", LongType, nullable = true),
-    StructField("jsondata", StringType, nullable = true),
-    StructField("resourcetype", StringType, nullable = true),
-    StructField("path", StringType, nullable = true),
-    StructField("baseurl", StringType, nullable = true)))
-
-  /** Delete-row projection: key columns only
-    * (reference: src/lib/client.js:543-546 `columnsForDeletes`). */
-  val deleteRow: StructType = StructType(Seq(
-    StructField("href", StringType, nullable = false),
-    StructField("path", StringType, nullable = true),
-    StructField("baseurl", StringType, nullable = true)))
-
-  /** Sync-state row (`sri2db_synctimes`,
-    * reference: src/lib/client.js:438-445). */
-  val syncState: StructType = StructType(Seq(
-    StructField("tablename", StringType, nullable = false),
-    StructField("baseurl", StringType, nullable = true),
-    StructField("path", StringType, nullable = true),
-    StructField("synctype", StringType, nullable = false),
-    StructField("lastmodified", LongType, nullable = true),
-    StructField("syncstart", LongType, nullable = true)))
-}
-
-/** Sync-state value: epoch-millis watermark + sync-start stamp
-  * (reference: src/lib/client.js:614-699 `getLastSyncDates`). */
 final case class SyncState(lastModified: Long, syncStart: Long)
 
 object SyncType {

@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
 /** Parquet metadata and tiny tables read and written on the driver, with
@@ -49,6 +49,20 @@ object DriverParquet {
       case _ => throw new IllegalStateException(
         s"$dir: data file ${file.getName} has no Spark schema in its footer")
     }
+  }
+
+  /** The table at `dir` read as `expected`, which starts no
+    * schema-inference job. Fails naming `dir` first unless its footer
+    * schema ([[sparkSchema]]) has exactly the columns of `expected`, with
+    * the same types (nullability aside): a read with an explicit schema
+    * would turn a renamed or retyped column into nulls. */
+  def readChecked(spark: SparkSession, dir: String, expected: StructType): DataFrame = {
+    def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toSet
+    val stored = sparkSchema(spark.sparkContext.hadoopConfiguration, dir)
+    if (columns(stored) != columns(expected))
+      throw new IllegalStateException(
+        s"$dir: stored columns ${stored.toDDL} do not match the expected ${expected.toDDL}")
+    spark.read.schema(expected).parquet(dir)
   }
 
   /** Every row of the table at `dir` as `schema` (string and long

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * The reference runs these as generated SQL inside one DB transaction
   * (`copyTempTablesDataToWriteTable`, src/lib/client.js:871-1118;
   * `copySafeSyncTempTablesDataToWriteTable`, src/lib/client.js:1124-1239).
-  * Here each sync strategy is a pure function `(target, delta) => newState`,
+  * Here each sync strategy is a pure function `(target, delta) => newState`
+  * (fullSync's new state does not depend on the target),
   * so the whole merge is ONE Catalyst plan: one dedup window over the
   * staged rows + anti/semi joins on the same key columns. The key side of
   * `delta`'s anti-join is the raw key columns of the tombstones and the
@@ -29,7 +30,7 @@ object Merge {
     * Unchanged-payload rows in staged replace their target row with an
     * identical one, so P5 dead-update elimination is a physical-write
     * optimization, not a semantic difference — see
-    * [[io.JdbcMergeSink]] (round ≥2) for where P5 matters.
+    * [[graft.sink.JdbcMergeSink.updateSql]] for where P5 matters.
     */
   def delta(target: DataFrame, staged: DataFrame, tombstones: DataFrame,
             keys: Seq[String] = Seq("href"),
@@ -51,18 +52,15 @@ object Merge {
   }
 
   /** fullSync merge (keep-existing mode, `preferUpdatesOverInserts`):
-    * prune rows absent from the snapshot, upsert the rest —
-    *   dedup(snapshot) ∪ (target ∩ nothing)  ≡ dedup(snapshot)
-    * but routed through the same prune/upsert joins the reference issues
-    * (src/lib/client.js:999-1019 + 1058-1110) so update/insert/delete row
-    * sets remain individually observable via the Diff operators. */
-  def full(target: DataFrame, snapshot: DataFrame,
+    * the reference prunes rows absent from the snapshot and upserts the
+    * rest (src/lib/client.js:999-1019 + 1058-1110), which leaves exactly
+    *   dedup(snapshot)
+    * so the old table is not an input. The pruned rows, when wanted, are
+    * `Diff.pruneAbsent(target, full(snapshot), keys)`. */
+  def full(snapshot: DataFrame,
            keys: Seq[String] = Seq("href"),
-           modified: String = "modified_ms"): DataFrame = {
-    // rows-to-delete = Diff.pruneAbsent(target, deduped, keys); the new
-    // state itself is exactly the deduped snapshot
+           modified: String = "modified_ms"): DataFrame =
     Dedup.keepLatest(snapshot, keys, modified)
-  }
 
   /** safeDeltaSync reconciliation: drop rows not in the authoritative
     * member list, then insert deduped missing rows fetched from the source.

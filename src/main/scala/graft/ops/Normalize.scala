@@ -34,11 +34,6 @@ object Normalize {
         coalesce(col("modified_ms"), lit(defaultModifiedMs)))
       .withColumn("key", coalesce(col("key"), keyFromHref(col("href"))))
 
-  /** P3 — delete-row projection: key columns only
-    * (reference: src/lib/client.js:543-546). */
-  def deleteRowShape(df: DataFrame, keys: Seq[String] = Seq("href")): DataFrame =
-    df.select(keys.map(col): _*)
-
   /** S3 — list-envelope normalization: explode `{results:[{href,$$expanded}]}`
     * into one row per resource, coalescing the expanded body over the bare
     * href (the `expand=NONE` case yields href-only entries).

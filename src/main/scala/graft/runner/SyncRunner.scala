@@ -14,8 +14,9 @@ import graft.ops._
 
 /** A materialized sync target the runner merges into. The parquet
   * implementation is the Spark-native stand-in for the reference's
-  * Postgres/MSSQL write table; a JDBC implementation plugs in behind the
-  * same trait (see graft.sink.JdbcMergeSink).
+  * Postgres/MSSQL write table, and the only implementation: the contract
+  * is a whole-table replace, while `graft.sink.JdbcMergeSink` merges a
+  * delta in SQL, so it does not implement this trait.
   */
 trait TargetTable {
   def read(spark: SparkSession): DataFrame
@@ -94,13 +95,14 @@ final class SyncRunner(spark: SparkSession, cfg: SyncConfig) {
 
   private val running = new AtomicBoolean(false)
 
-  /** Reference: fullSync = sync(null) (client.js:1923-1941). */
+  /** Reference: fullSync = sync(null) (client.js:1923-1941). The new
+    * table is the deduped snapshot, so the target is only written, never
+    * read. */
   def fullSync(source: DataFrame, target: TargetTable): SyncResult =
     sync { obs =>
       val t0 = now()
-      val current = if (target.exists) target.read(spark) else emptyLike(source)
-      val merged = Merge.full(current, source, cfg.keys, cfg.modifiedCol)
-      commit(target, merged, SyncType.Full, t0, obs)
+      commit(target, Merge.full(source, cfg.keys, cfg.modifiedCol),
+        SyncType.Full, t0, obs)
     }
 
   /** Reference: deltaSync(modifiedSince?) — explicit `modifiedSince`
@@ -264,23 +266,5 @@ object SyncRunner {
         .select(lit(1).as(name)).collect()
       Await.ready(handled.future, 10.minutes)
     } finally spark.listenerManager.unregister(listener)
-  }
-}
-
-/** T5 — multi-stream orchestration (reference `Sri2DbMulti`,
-  * client.js:2094-2145): run N sync jobs with bounded parallelism, each
-  * result settled independently as a Try (README.md:231-238 contract).
-  * Jobs share one SparkSession; the scheduler interleaves their stages. */
-object MultiSync {
-  import scala.concurrent._
-  import scala.concurrent.duration.Duration
-
-  def run[A](jobs: Seq[() => A], concurrency: Int = 1): Seq[scala.util.Try[A]] = {
-    val ec = ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(math.max(1, concurrency)))
-    try {
-      val futures = jobs.map(j => Future(scala.util.Try(j()))(ec))
-      Await.result(Future.sequence(futures)(implicitly, ec), Duration.Inf)
-    } finally ec.shutdown()
   }
 }

@@ -20,9 +20,12 @@ import org.apache.spark.sql.DataFrame
   *   3. statements are generated per dialect (postgres / mssql) and
   *      unit-tested as text; only step 1 touches executor-side JDBC.
   *
-  * Idempotence: the merge is keyed on (href[,path,baseurl]) and the
-  * staging load is TRUNCATE+INSERT under a deterministic batch id, so a
-  * retried batch converges (SURVEY §7.3 risk 1).
+  * Idempotence: the merge is keyed on (href[,path,baseurl]), but the
+  * staging load ([[stageBatch]]) is a plain INSERT per partition, so a
+  * retried task stages its rows twice. The pg/mssql insert arms keep one
+  * row per key with ROW_NUMBER, and an update writes the same values from
+  * either copy; the Derby arm assumes a key-unique staging table, so it
+  * does not dedup a retried task's copies (SURVEY §7.3 risk 1).
   */
 object JdbcMergeSink {
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.ops.DedupText
+import graft.ops.{DedupText, DriverParquet}
 
 /** Streaming decontamination maintenance — the monitoring deployment of
   * the batch identity [[DedupText.contaminationMergedDelta]]
@@ -79,7 +79,8 @@ object ContamMonitor {
       case Some(id) =>
         // explicit schemas: both state tables' shapes are fixed (the
         // ProfileMonitor convention), so the per-batch parquet
-        // footer/schema-inference job of each bare read is pure overhead
+        // footer/schema-inference job of each bare read is pure overhead;
+        // readChecked compares them with the stored footers first
         val shSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("s",
             org.apache.spark.sql.types.StringType)))
@@ -87,10 +88,10 @@ object ContamMonitor {
           corpus.schema(idCol),
           org.apache.spark.sql.types.StructField("n_hits",
             org.apache.spark.sql.types.LongType)))
-        val prevSh = s.read.schema(shSchema)
-          .parquet(s"$stateDir/benchsh_b$id")
-        val stored = s.read.schema(hitsSchema)
-          .parquet(s"$stateDir/hits_b$id")
+        val prevSh = DriverParquet.readChecked(s,
+          s"$stateDir/benchsh_b$id", shSchema)
+        val stored = DriverParquet.readChecked(s,
+          s"$stateDir/hits_b$id", hitsSchema)
         // the contaminationMergedDelta identity, inlined so its
         // new-shingle remainder (sh(batch) \ prevSh) is shared with the
         // state write instead of re-derived: same probe, same grouped

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.ops.TimeSeries
+import graft.ops.{DriverParquet, TimeSeries}
 
 /** Streaming matrix-profile maintenance — the monitoring deployment of
   * the batch append identity [[TimeSeries.matrixProfileMergedDelta]]
@@ -82,7 +82,8 @@ object ProfileMonitor {
         // explicit schemas: the state tables' shapes are fully
         // determined by the batch schema, so the per-batch parquet
         // footer/schema-inference job of each bare s.read.parquet is
-        // pure overhead (guide §1.2 — two 1-task jobs per batch gone)
+        // pure overhead (guide §1.2 — two 1-task jobs per batch gone);
+        // readChecked compares them with the stored footers first
         val seriesSchema = rows.schema
         val profileSchema = org.apache.spark.sql.types.StructType(
           keys.map(kc => seriesSchema(kc)) ++ Seq(
@@ -92,8 +93,8 @@ object ProfileMonitor {
               org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("mp_j",
               org.apache.spark.sql.types.LongType)))
-        val prevSeries = s.read.schema(seriesSchema)
-          .parquet(s"$stateDir/series_b$id")
+        val prevSeries = DriverParquet.readChecked(s,
+          s"$stateDir/series_b$id", seriesSchema)
         // replayed rows (same key + order position) are not new
         val fresh = rows.join(prevSeries, keys :+ orderCol, "left_anti")
         val full = graft.ops.Pin.lazily(
@@ -101,7 +102,8 @@ object ProfileMonitor {
             .unionByName(fresh.withColumn("__arrived", lit(true))))
         (TimeSeries.matrixProfileMergedDelta(full, keys, col(orderCol),
           xCol, w, col("__arrived"),
-          s.read.schema(profileSchema).parquet(s"$stateDir/profile_b$id"),
+          DriverParquet.readChecked(s, s"$stateDir/profile_b$id",
+            profileSchema),
           maxSeries),
           full.drop("__arrived"))
     }

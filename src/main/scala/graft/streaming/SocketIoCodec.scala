@@ -32,11 +32,8 @@ import graft.expr.JsonSupport
 object SocketIoCodec {
 
   sealed trait Frame
-  /** Engine.io handshake: sid + ping cadence + the transports the
-    * server will accept an in-session upgrade to (v4 handshakes list
-    * `["websocket"]` when the probe is allowed). */
-  final case class Open(sid: String, pingIntervalMs: Long,
-                        upgrades: Seq[String] = Nil) extends Frame
+  /** Engine.io handshake: sid + ping cadence. */
+  final case class Open(sid: String, pingIntervalMs: Long) extends Frame
   case object Close extends Frame
   /** Server ping; a live client answers with [[encodePong]]. */
   case object Ping extends Frame
@@ -61,10 +58,7 @@ object SocketIoCodec {
       case '0' =>
         val j = JsonSupport.mapper.readTree(body)
         Open(Option(j.get("sid")).map(_.asText).getOrElse(""),
-          Option(j.get("pingInterval")).map(_.asLong).getOrElse(25000L),
-          Option(j.get("upgrades")).filter(_.isArray)
-            .map(a => (0 until a.size()).map(a.get(_).asText))
-            .getOrElse(Nil))
+          Option(j.get("pingInterval")).map(_.asLong).getOrElse(25000L))
       case '1' => Close
       case '2' => Ping
       case '3' => Pong
@@ -130,35 +124,6 @@ object SocketIoCodec {
     * direction (the client sends `2`, the server answers `3`). */
   def encodeClientPing: String = "2"
 
-  /** HTTP long-polling carries BATCHES of engine.io packets per
-    * request/response body. v4 joins packets with the ASCII record
-    * separator 0x1E; v3 length-prefixes each as `<charCount>:<packet>`
-    * (the XHR framing both socket.io client majors fall back to when
-    * the websocket upgrade is blocked). */
-  val RecordSep: Char = '\u001e'
-
-  def encodePayload(frames: Seq[String], v4: Boolean): String =
-    if (v4) frames.mkString(RecordSep.toString)
-    else frames.map(f => s"${f.length}:$f").mkString
-
-  def decodePayload(body: String, v4: Boolean): Seq[String] =
-    if (body.isEmpty) Nil
-    else if (v4) body.split(RecordSep).toSeq.filter(_.nonEmpty)
-    else {
-      val out = Seq.newBuilder[String]
-      var i = 0
-      while (i < body.length) {
-        val colon = body.indexOf(':', i)
-        require(colon > i, s"malformed v3 polling payload at $i: $body")
-        val len = body.substring(i, colon).toInt
-        require(colon + 1 + len <= body.length,
-          s"v3 polling payload truncated: wanted $len chars at $colon")
-        out += body.substring(colon + 1, colon + 1 + len)
-        i = colon + 1 + len
-      }
-      out.result()
-    }
-
   /** An `update`-room frame → the [[PushListener]] event it routes.
     * The reference treats ANY update payload as "run one delta sync for
     * my path" (client.js:2023-2027) — the data's `path` field (or a bare
@@ -202,7 +167,7 @@ final class FrameLogEventSource(frames: Seq[String]) extends EventSource {
     val it = frames.iterator
     val open = it.nextOption().map(SocketIoCodec.decode)
     open match {
-      case Some(SocketIoCodec.Open(_, _, _)) =>
+      case Some(SocketIoCodec.Open(_, _)) =>
       case other => sys.error(s"recorded session must start with an " +
         s"engine.io open frame, got: $other")
     }

@@ -28,7 +28,7 @@ object StreamingSync {
     * @param stream   streaming DataFrame in SRI row shape
     *                 (href/key/modified_ms/jsondata/resourcetype)
     * @param isTombstone row predicate marking delete events (T2)
-    * @param target   merge target (parquet locally, JDBC at deployment)
+    * @param target   merge target; `ParquetTarget` is the one implementation
     */
   def deltaMergeStream(spark: SparkSession, stream: DataFrame,
                        isTombstone: org.apache.spark.sql.Column,
@@ -80,7 +80,7 @@ object StreamingSync {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val typed = stream.select("href", "modified_ms", "jsondata")
       .as[(String, Long, String)]
-    // same winner as Dedup.keepLatest / LatestAggregator: max modified_ms,
+    // same winner as Dedup.keepLatest: max modified_ms,
     // ties broken by SMALLEST jsondata with null first (null-safe — a
     // plain tuple maxBy would NPE on null payloads and pick the opposite
     // tie winner from the batch path)

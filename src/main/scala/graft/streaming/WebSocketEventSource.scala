@@ -83,7 +83,7 @@ final class WebSocketEventSource(
   /** One decoded inbound frame: handshake steps, keep-alives, events. */
   private def handleFrame(w: WebSocket, frame: String): Unit =
     try SocketIoCodec.decode(frame) match {
-      case SocketIoCodec.Open(_, pingIntervalMs, _) =>
+      case SocketIoCodec.Open(_, pingIntervalMs) =>
         // v4: the client requests the default-namespace connect; a v2
         // server acks without being asked
         if (protocolV4) { w.sendText("40", true); () }

@@ -110,9 +110,8 @@ class MergeSpec extends SparkSuite {
   }
 
   test("full merge equals deduped snapshot") {
-    val target = sri.where(col("modified_ms") < cut)
     val snap = sri
-    assert(canon(Merge.full(target, snap))
+    assert(canon(Merge.full(snap))
       .sameElements(canon(Dedup.keepLatest(snap))))
   }
 

@@ -40,14 +40,4 @@ class PropertiesSpec extends AnyFunSuite {
         start + 1) === prev)
     }
   }
-
-  test("KeyedFetch packing partitions the key sequence exactly") {
-    (1 to 200).foreach { _ =>
-      val keys = Seq.fill(rnd.nextInt(1500))(
-        rnd.alphanumeric.take(1 + rnd.nextInt(40)).mkString)
-      val batches = graft.source.KeyedFetch.packBatches("/r", keys)
-      assert(batches.flatMap(_.keys) === keys)
-      assert(batches.forall(_.keys.size <= 500))
-    }
-  }
 }

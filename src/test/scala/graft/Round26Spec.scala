@@ -162,6 +162,25 @@ class Round26Spec extends SparkSuite {
     assert(streamed === rebuild)
   }
 
+  test("ProfileMonitor.foldBatch: a stored profile whose columns drifted " +
+      "fails naming its directory instead of reading the column as nulls") {
+    val state = java.nio.file.Files.createTempDirectory("smp_drift").toString
+    val rows = Seq.tabulate(20)(i => ("k", i.toLong, (i * i % 7).toLong))
+      .toDF("pri", "wn", "x")
+    ProfileMonitor.foldBatch(rows.where(col("wn") < 12), 0L, Seq("pri"),
+      "wn", "x", w = 4, maxSeries = 400, stateDir = state)
+    // the committed profile as an older layout would have stored it:
+    // mp_d2 renamed
+    Seq(("k", 0L, 5L, 1L)).toDF("pri", "i", "d2", "mp_j")
+      .write.mode("overwrite").parquet(s"$state/profile_b0")
+    val e = intercept[IllegalStateException] {
+      ProfileMonitor.foldBatch(rows.where(col("wn") >= 12), 1L, Seq("pri"),
+        "wn", "x", w = 4, maxSeries = 400, stateDir = state)
+    }
+    assert(e.getMessage.contains(s"$state/profile_b0"), e.getMessage)
+    assert(ProfileMonitor.latestId(state) === Some(0L))
+  }
+
   // ---- occupancy-adaptive NN-descent seeding ------------------------
 
   test("adaptiveBucketed widens the signature prefix with corpus size " +

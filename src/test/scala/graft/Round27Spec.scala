@@ -216,6 +216,26 @@ class Round27Spec extends SparkSuite {
       .as[(Long, Long)].collect().toMap === Map(10L -> 2L))
   }
 
+  test("ContamMonitor.foldBatch: stored hits whose columns drifted fail " +
+      "naming their directory instead of reading the counts as nulls") {
+    import graft.streaming.ContamMonitor
+    val corpus = docsDf(10L -> "a b c d e")
+    val state = java.nio.file.Files
+      .createTempDirectory("scm_drift").toString
+    ContamMonitor.foldBatch(docsDf(1L -> "a b c"), 0L, corpus,
+      "doc_id", "text", 3, state)
+    // the committed counts as an older layout would have stored them:
+    // n_hits renamed
+    Seq((10L, 1L)).toDF("doc_id", "hits")
+      .write.mode("overwrite").parquet(s"$state/hits_b0")
+    val e = intercept[IllegalStateException] {
+      ContamMonitor.foldBatch(docsDf(2L -> "c d e"), 1L, corpus,
+        "doc_id", "text", 3, state)
+    }
+    assert(e.getMessage.contains(s"$state/hits_b0"), e.getMessage)
+    assert(ContamMonitor.latestId(state) === Some(0L))
+  }
+
   // ---- sim_graph_search: lockstep beam over a kNN graph -------------
 
   /** Hand-built int8 sketch rows: 2-d integer vectors on a quarter

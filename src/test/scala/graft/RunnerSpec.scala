@@ -123,70 +123,27 @@ class RunnerSpec extends SparkSuite {
     assert(denied, "second concurrent sync should have been rejected")
   }
 
-  test("MultiSync settles each job independently (T5)") {
-    val results = MultiSync.run(Seq(
-      () => 1 + 1,
-      () => throw new RuntimeException("boom"),
-      () => 40 + 2), concurrency = 2)
-    assert(results(0).isSuccess && results(0).get === 2)
-    assert(results(1).isFailure)
-    assert(results(2).isSuccess && results(2).get === 42)
-  }
-
-  test("MultiRunner derives configs via JSON-merge-patch: nested keys " +
-      "flatten, null deletes, each patch sees a fresh base") {
-    val base = """{"api": {"path": "/content"}, "db": {"table": "t"},
-                 | "dry-run": true}""".stripMargin
-    val got = MultiRunner.deriveConfigs(base, Seq(
-      "{}",
-      """{"api": {"path": "/persons"}, "dry-run": null}""",
-      """{"db": {"table": "u", "schema": "s"}}"""))
-    assert(got(0) === Map("api.path" -> "/content", "db.table" -> "t",
-      "dry-run" -> "true"))
-    assert(got(1) === Map("api.path" -> "/persons", "db.table" -> "t"),
-      s"null must DELETE dry-run (RFC 7386): ${got(1)}")
-    // patch 2 must not see patch 1's mutations (clonedeep semantics)
-    assert(got(2) === Map("api.path" -> "/content", "db.table" -> "u",
-      "db.schema" -> "s", "dry-run" -> "true"))
-    // arrays keep their JSON form (ArrayNode.asText is "" — a silent
-    // value loss the flattener must not commit)
-    val arr = MultiRunner.deriveConfigs(
-      """{"keys": ["href", "key"], "n": 2}""", Seq("{}"))
-    assert(arr.head === Map("keys" -> """["href","key"]""", "n" -> "2"),
-      s"array config values must survive flattening: ${arr.head}")
-  }
-
-  test("MultiRunner.runAll: one base + overwrites run N settled syncs " +
-      "through Main.run (Sri2DbMulti parity, client.js:2105)") {
+  test("fullSync never reads the target: an existing target whose read " +
+      "throws is replaced by the deduped snapshot") {
     val base = tmpDir()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$base/page0.json"),
-      """{"results": [
-        |  {"href": "/a/1", "$$expanded": {"key": "1", "$$meta":
-        |    {"permalink": "/a/1", "type": "A",
-        |     "modified": "2024-01-10T00:00:00.000Z"}}},
-        |  {"href": "/a/2", "$$expanded": {"key": "2", "$$meta":
-        |    {"permalink": "/a/2", "type": "A",
-        |     "modified": "2024-01-12T00:00:00.000Z"}}}
-        |]}""".stripMargin)
-    val baseJson =
-      s"""{"pages": "$base", "state": "$base/state",
-         | "synctype": "fullSync", "target": "$base/t0",
-         | "table": "t0"}""".stripMargin
-    val results = MultiRunner.runAll(baseJson, Seq(
-      "{}",
-      s"""{"target": "$base/t1", "table": "t1"}""",
-      """{"synctype": "bogusSync"}"""),
-      concurrency = 2)(opts => Main.run(spark, opts))
-    assert(results.length === 3)
-    assert(results(0).isSuccess && results(0).get.rowsAfter === 2)
-    assert(results(1).isSuccess && results(1).get.rowsAfter === 2)
-    assert(results(2).isFailure,
-      "the bad-pages stream must settle as rejected, not sink the batch")
-    // the two fulfilled streams really landed in their own targets
-    assert(spark.read.parquet(s"$base/t0").count() === 2)
-    assert(spark.read.parquet(s"$base/t1").count() === 2)
+    val parquet = new ParquetTarget(spark, s"$base/table")
+    val unreadable = new TargetTable {
+      def read(s: org.apache.spark.sql.SparkSession): DataFrame =
+        throw new IllegalStateException("no Spark schema in the footer")
+      def overwrite(df: DataFrame): Unit = parquet.overwrite(df)
+      def exists: Boolean = true
+    }
+    // every resource twice: the served row and an older, stale copy
+    val snapshot = sri.unionByName(sri
+      .withColumn("modified_ms", col("modified_ms") - 1)
+      .withColumn("jsondata", lit("stale")))
+    val r = new SyncRunner(spark, SyncConfig("t", s"$base/state"))
+      .fullSync(snapshot, unreadable)
+    val want = ops.Dedup.keepLatest(sri).collect().map(_.toString).sorted
+    assert(r.rowsAfter === want.length)
+    assert(parquet.read(spark).collect().map(_.toString).sorted === want)
   }
+
   // ---- one-pass deltaSync: the write carries the watermark and row count
 
   private val day = 86400000L

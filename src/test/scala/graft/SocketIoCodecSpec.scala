@@ -24,7 +24,7 @@ class SocketIoCodecSpec extends SparkSuite {
   test("handshake frames decode: open carries sid + ping cadence, " +
       "connect acks the namespace") {
     assert(decode(recorded.head) ===
-      Open("lv_VI97HAXpY6yYzAAAC", 25000L, Seq("websocket")))
+      Open("lv_VI97HAXpY6yYzAAAC", 25000L))
     assert(decode(recorded(1)) === Connect("/"))
     assert(decode("2") === Ping)
     assert(encodePong === "3")

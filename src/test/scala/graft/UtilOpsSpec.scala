@@ -1,28 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.source.KeyedFetch
 import graft.ops.Skew
-import graft.expr.LatestAggregator
 
-/** S2 URL packing, skew utilities, typed keep-latest aggregator, CLI. */
+/** Skew utilities, CLI, multimodal and sampling helpers. */
 class UtilOpsSpec extends SparkSuite {
-
-  test("KeyedFetch packs by batch size and URL length (S2)") {
-    val keys = (1 to 1200).map(i => s"k$i")
-    val batches = KeyedFetch.packBatches("/a", keys)
-    assert(batches.map(_.keys.size).sum === 1200)
-    assert(batches.forall(_.keys.size <= 500))
-    assert(batches.forall(_.path.length <= 2048))
-    assert(batches.head.path.startsWith("/a?keyIn=k1,"))
-    // existing query string → & separator (reference getNextPath)
-    assert(KeyedFetch.packBatches("/a?x=1", Seq("k"))
-      .head.path === "/a?x=1&keyIn=k")
-    // URL-length bound: long keys force small batches
-    val longKeys = (1 to 50).map(i => "x" * 500 + i)
-    assert(KeyedFetch.packBatches("/a", longKeys)
-      .forall(b => b.path.length <= 2048 || b.keys.size == 1))
-  }
 
   test("saltedJoin equals plain join, spread over salts") {
     val big = Tables.lineitem(spark, sfDir)
@@ -43,26 +25,6 @@ class UtilOpsSpec extends SparkSuite {
       col("l_quantity"), salts = 8)
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet
     assert(salted === plain)
-  }
-
-  test("LatestAggregator matches window keep-latest (typed API)") {
-    import spark.implicits._
-    val ds = Tables.sriEvents(spark, sfDir)
-      .withColumn("href", concat(lit("/u/"),
-        (col("key").cast("long") % 50).cast("string"))) // force duplicates
-      .withColumn("path", lit(null: String))
-      .withColumn("baseurl", lit(null: String))
-      .select("href", "key", "modified_ms", "jsondata", "resourcetype",
-        "path", "baseurl")
-      .as[SriRow]
-    val typed = ds.groupByKey(_.href)
-      .agg(LatestAggregator.toColumn.name("latest"))
-      .map(_._2)
-      .collect().map(r => (r.href, r.modified_ms, r.jsondata)).toSet
-    val window = ops.Dedup.keepLatest(ds.toDF())
-      .collect().map(r => (r.getAs[String]("href"),
-        r.getAs[Long]("modified_ms"), r.getAs[String]("jsondata"))).toSet
-    assert(typed === window)
   }
 
   test("CLI Main dispatches fullSync then deltaSync over the sri source") {
