@@ -32,6 +32,14 @@ object AtomicDir {
     if (bak.exists()) rm(bak)
   }
 
+  /** An empty directory at `path`, replacing whatever is there (a staging
+    * directory a crashed commit left behind). */
+  def recreate(path: String): Unit = {
+    val dir = new File(path)
+    rm(dir)
+    if (!dir.mkdirs()) throw new IOException(s"could not create $path")
+  }
+
   private def rm(f: File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rm)
     f.delete()

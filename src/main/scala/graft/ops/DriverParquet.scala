@@ -1,24 +1,26 @@
 package graft.ops
 
-import scala.jdk.CollectionConverters._
 import scala.util.Using
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
 /** Parquet metadata and tiny tables read and written on the driver, with
   * parquet-hadoop: no Spark job. A directory is laid out the way Spark's
   * own writer lays out a table (data files next to hidden `_`/`.` files),
-  * and files written here carry Spark's schema in their footer, so
-  * `spark.read.parquet` reads them as the schema they were written with. */
+  * and files written here ([[ParquetParts]]) carry Spark's schema in their
+  * footer, so `spark.read.parquet` reads them as the schema they were
+  * written with. Files are opened with read options built from the passed
+  * `Configuration`: parquet-hadoop's `Path`-based builders would build a
+  * new one per call and re-parse Hadoop's default resources. */
 object DriverParquet {
 
   /** The footer key under which Spark's Parquet writer stores the table's
@@ -42,7 +44,7 @@ object DriverParquet {
   def sparkSchema(conf: Configuration, dir: String): StructType = {
     val file = dataFiles(conf, dir).headOption.getOrElse(
       throw new IllegalStateException(s"no Parquet data file under $dir"))
-    val kv = Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(file, conf)))(
+    val kv = Using.resource(open(conf, file))(
       _.getFooter.getFileMetaData.getKeyValueMetaData)
     Option(kv.get(SparkSchemaKey)).map(DataType.fromJson) match {
       case Some(s: StructType) => s
@@ -69,47 +71,30 @@ object DriverParquet {
     * columns): a column a file lacks reads as null. */
   def readRows(conf: Configuration, dir: String, schema: StructType): Seq[Row] =
     dataFiles(conf, dir).flatMap { file =>
-      Using.resource(ParquetReader.builder(new GroupReadSupport(), file)
-          .withConf(conf).build()) { reader =>
-        Iterator.continually(reader.read()).takeWhile(_ != null)
-          .map(g => toRow(g, schema)).toList
+      Using.resource(open(conf, file)) { reader =>
+        val fileSchema = reader.getFooter.getFileMetaData.getSchema
+        val io = new ColumnIOFactory().getColumnIO(fileSchema)
+        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
+          .flatMap { group =>
+            val records = io.getRecordReader(group, new GroupRecordConverter(fileSchema))
+            Iterator.fill(group.getRowCount.toInt)(toRow(records.read(), schema))
+          }.toList
       }
     }
 
-  /** Write `rows` of `schema` (string and long columns) as the single data
-    * file of a new directory `dir`, replacing what is there. */
-  def writeRows(conf: Configuration, dir: String, schema: StructType,
+  /** Write `rows` of `schema` as the single data file of a new directory
+    * `dir`, replacing what is there, with the session's Parquet settings. */
+  def writeRows(spark: SparkSession, dir: String, schema: StructType,
                 rows: Seq[Row]): Unit = {
-    val d = new Path(dir)
-    d.getFileSystem(conf).delete(d, true)
-    val msg = messageType(schema)
-    Using.resource(ExampleParquetWriter.builder(new Path(d, "part-00000.parquet"))
-        .withConf(conf).withType(msg)
-        .withExtraMetaData(Map(SparkSchemaKey -> schema.json).asJava)
-        .build()) { w =>
-      rows.foreach { r =>
-        val g = new SimpleGroup(msg)
-        schema.fields.indices.filterNot(r.isNullAt).foreach { i =>
-          schema(i).dataType match {
-            case StringType => g.add(i, r.getString(i))
-            case LongType => g.add(i, r.getLong(i))
-          }
-        }
-        w.write(g)
-      }
-    }
+    AtomicDir.recreate(dir)
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    ParquetParts(spark, schema).write(dir, 0,
+      rows.iterator.map(toInternal(_).asInstanceOf[InternalRow]), always = true)
   }
 
-  private def messageType(schema: StructType): MessageType =
-    new MessageType("spark_schema", schema.fields.toSeq.map[Type] { f =>
-      f.dataType match {
-        case StringType => Types.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name)
-        case LongType => Types.optional(PrimitiveTypeName.INT64).named(f.name)
-        case t => throw new IllegalArgumentException(
-          s"driver-side Parquet supports string and long columns, not $t (${f.name})")
-      }
-    }.asJava)
+  private def open(conf: Configuration, file: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf).build())
 
   private def toRow(g: Group, schema: StructType): Row = {
     val t = g.getType

@@ -119,9 +119,18 @@ object Graph {
     require(iters >= 1, "iters must be >= 1")
     val in = prInputs(edges, srcCol, dstCol, seeds, scale)
     var r = prInit(in)
-    for (_ <- 1 to iters) r = prRound(in, r)
+    for (i <- 1 to iters) {
+      r = prRound(in, r)
+      // a lazy pin every PrPinEvery rounds bounds the plan depth; an
+      // unpinned chain of many rounds overflows the stack when a task is
+      // serialized. Its consumer is the next round's single scan of `r`.
+      if (i % PrPinEvery == 0 && i < iters) r = r.pinLazy()
+    }
     r
   }
+
+  /** Rounds of the fixed-iteration PageRank between lineage pins. */
+  private val PrPinEvery = 16
 
   /** One synchronous PageRank round — the SINGLE implementation both the
     * fixed-iteration graded form and the convergence-terminated driver

@@ -108,8 +108,7 @@ object Watermark {
     val kept =
       if (!new java.io.File(statePath).exists()) Nil
       else stateRows(spark, statePath).filterNot(isKey(_, tablename, synctype))
-    DriverParquet.writeRows(spark.sparkContext.hadoopConfiguration,
-      statePath + ".tmp", StateSchema,
+    DriverParquet.writeRows(spark, statePath + ".tmp", StateSchema,
       kept :+ Row(tablename, null, null, synctype, st.lastModified, st.syncStart))
     // a failed rename must not silently lose the watermark — losing it
     // falls back to a cold-start re-sync from 1900

@@ -3,9 +3,11 @@ package graft.runner
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -16,7 +18,9 @@ import graft.ops._
   * implementation is the Spark-native stand-in for the reference's
   * Postgres/MSSQL write table, and the only implementation: the contract
   * is a whole-table replace, while `graft.sink.JdbcMergeSink` merges a
-  * delta in SQL, so it does not implement this trait.
+  * delta in SQL, so it does not implement this trait. [[ParquetTarget]]
+  * is a local-filesystem directory holding only `part-*` files (no
+  * `_SUCCESS`), committed by one directory swap ([[graft.ops.AtomicDir]]).
   */
 trait TargetTable {
   def read(spark: SparkSession): DataFrame
@@ -30,21 +34,40 @@ trait TargetTable {
   def exists: Boolean
 }
 
-/** Parquet-directory target with write-temp-then-rename atomicity.
-  * At cluster scale the rename becomes a metastore/table-format commit
-  * (Iceberg/Delta); the runner contract is unchanged. `read` takes the
-  * schema Spark stored in a data file's footer, read on the driver, so it
-  * starts no schema-inference job; a target with no data file or no Spark
-  * schema in its footer fails naming the path. */
+/** Parquet-directory target with write-temp-then-rename atomicity, on the
+  * local filesystem only, like [[AtomicDir]]. The directory holds only
+  * `part-NNNNN.<codec>.parquet` files (no `_SUCCESS`, no checksum files):
+  * `overwrite` runs the frame's query once, each non-empty partition's task
+  * writes its part into `<path>.staging` with [[ParquetParts]] (Spark's
+  * Parquet encoder, no file-format writer and no commit protocol), and the
+  * commit is the swap of the staging directory onto `path`. A frame with
+  * no rows leaves one schema-only part. At cluster scale the swap becomes
+  * a metastore/table-format commit (Iceberg/Delta); the runner contract is
+  * unchanged. `read` takes the schema Spark stored in a data file's footer,
+  * read on the driver, so it starts no schema-inference job; a target with
+  * no data file or no Spark schema in its footer fails naming the path. */
 final class ParquetTarget(spark: SparkSession, path: String) extends TargetTable {
   override def exists: Boolean = AtomicDir.restore(path)
   override def read(spark: SparkSession): DataFrame = spark.read
     .schema(DriverParquet.sparkSchema(spark.sparkContext.hadoopConfiguration, path))
     .parquet(path)
   override def overwrite(df: DataFrame): Unit = {
-    val tmp = path + ".staging"
-    df.write.mode("overwrite").parquet(tmp)
-    AtomicDir.swap(tmp, path)
+    val staging = path + ".staging"
+    AtomicDir.recreate(staging)
+    val session = df.sparkSession
+    val parts = ParquetParts(session, df.schema)
+    // a fresh execution of the frame's plan in the frame's session, run as
+    // a Dataset action runs its own: the session's query listeners see it,
+    // observed metrics included
+    val qe = session.sessionState.executePlan(df.queryExecution.analyzed)
+    val wrote = SQLExecution.withNewExecutionId(qe, Some("overwrite")) {
+      session.sparkContext.runJob(qe.toRdd,
+        (task: TaskContext, rows: Iterator[InternalRow]) =>
+          parts.write(staging, task.partitionId(), rows))
+    }
+    // read and sparkSchema need a file, even for a frame with no rows
+    if (!wrote.contains(true)) parts.write(staging, 0, Iterator.empty, always = true)
+    AtomicDir.swap(staging, path)
   }
   override def toString: String = s"ParquetTarget($path)"
 }

@@ -98,6 +98,18 @@ class Round9Spec extends SparkSuite {
     assert(rows(r) === rows(onceMore), "not a true fixpoint")
   }
 
+  test("pageRankInt runs 200 rounds (lineage pinned every 16) and equals " +
+      "the converged ranks") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (5L, 1L),
+      (6L, 4L), (2L, 1L)).toDF("src", "dst")
+    val (r, _) = graft.ops.Graph.pageRankIntConverged(
+      edges, "src", "dst", eps = 0L, maxIters = 80)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("node").collect().map(_.toString).toSeq
+    assert(rows(graft.ops.Graph.pageRankInt(edges, "src", "dst", iters = 200)) ===
+      rows(r))
+  }
+
   test("pageRankIntConverged fails loudly when maxIters rounds cannot " +
       "reach eps") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L))

@@ -6,6 +6,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -109,17 +110,23 @@ class RunnerSpec extends SparkSuite {
     val base = tmpDir()
     val runner = new SyncRunner(spark, SyncConfig("t", s"$base/state"))
     val target = new ParquetTarget(spark, s"$base/table")
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val slowSource = sri // the sync itself is slow enough at test scale
-    val t = new Thread(() => {
-      gate.countDown(); runner.fullSync(slowSource, target); ()
-    })
-    t.start(); gate.await()
-    Thread.sleep(50) // let the first sync acquire the flag
+    // the first sync holds the single-flight flag inside its commit until
+    // the second attempt has returned, however fast the sync itself is
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val held = new TargetTable {
+      override def read(s: org.apache.spark.sql.SparkSession): DataFrame = target.read(s)
+      override def exists: Boolean = target.exists
+      override def overwrite(df: DataFrame): Unit = {
+        entered.countDown(); release.await(); target.overwrite(df)
+      }
+    }
+    val t = new Thread(() => { runner.fullSync(sri, held); () })
+    t.start(); entered.await()
     val denied =
       try { runner.fullSync(sri, target); false }
       catch { case _: IllegalStateException => true }
-    t.join()
+    release.countDown(); t.join()
     assert(denied, "second concurrent sync should have been rejected")
   }
 
@@ -222,9 +229,10 @@ class RunnerSpec extends SparkSuite {
     // the target's schema are read and written on the driver
     assert(jobs === 3, s"jobs of one steady deltaSync")
     val qs = queries.asScala.toSeq
-    val write = qs.indexWhere(_.analyzed.collectFirst {
-      case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-        if c.outputPath.toUri.getPath == table + ".staging" => c
+    // the write is the query that ran the merged rows: it carries the
+    // sync's observed row count
+    val write = qs.indexWhere(_.logical.collectFirst {
+      case c: CollectMetrics if c.name.startsWith("sync_") && c.name.endsWith("_rows") => c
     }.isDefined)
     assert(write >= 0, qs.map(_.analyzed.nodeName))
     // the state is written on the driver: no query reads the target after

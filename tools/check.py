@@ -13,9 +13,15 @@ relative tolerance reported separately.
 Besides the PASS/FAIL stdout it persists a driver-format artifact (per
 query {"rows_match","schema_match","hash_match","spark_rows",
 "oracle_rows","err"} — the CORRECTNESS_r{N}.json shape) to
-[artifactPath], default CORRECTNESS_LOCAL.json in the repo root, so the
-round always carries a committed correctness record even when the
-driver's own artifact arrives empty (it did in round 13).
+[artifactPath]. The default path is CORRECTNESS_LOCAL.json in the repo
+root: a run without a third argument OVERWRITES the committed file, so pass
+a scratch path unless the run is meant to replace that record.
+
+An exception inside the DuckDB oracle itself (out of memory, say) says
+nothing about the Spark output: it prints as ORACLE-ERROR, is recorded
+under the query's "oracle_err" key (its "err" stays null) and is counted
+apart in the summary. It still fails the exit status: the query was not
+checked.
 
 Driver-side tooling only — the shipped Scala library never imports this.
 """
@@ -35,14 +41,16 @@ def main(sf_dir, out_dir, artifact=None):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_oracle_err = 0
     report = {}
 
     def rec(name, rows=False, schema=False, hsh=False,
-            spark_rows=None, oracle_rows=None, err=None):
+            spark_rows=None, oracle_rows=None, err=None, oracle_err=None):
         report[name] = {"rows_match": rows, "schema_match": schema,
                         "hash_match": hsh, "spark_rows": spark_rows,
                         "oracle_rows": oracle_rows, "err": err}
+        if oracle_err is not None:
+            report[name]["oracle_err"] = oracle_err
 
     for name, sql in sorted(oracle.items()):
         # spark dump first — it is cheap to read and a scoped
@@ -59,9 +67,9 @@ def main(sf_dir, out_dir, artifact=None):
         try:
             want = con.execute(sql).fetch_arrow_table()
         except Exception as e:
-            print(f"FAIL {name}: oracle error: {e}")
-            rec(name, spark_rows=got.num_rows, err=f"oracle error: {e}")
-            n_fail += 1
+            print(f"ORACLE-ERROR {name}: {e}")
+            rec(name, spark_rows=got.num_rows, oracle_err=str(e))
+            n_oracle_err += 1
             continue
         wcols, gcols = sorted(want.column_names), sorted(got.column_names)
         if wcols != gcols:
@@ -138,8 +146,9 @@ def main(sf_dir, out_dir, artifact=None):
     with open(artifact, "w") as f:
         json.dump(report, f, indent=2, sort_keys=True)
         f.write("\n")
-    print(f"\n{n_pass} pass / {n_fail} fail  (artifact: {artifact})")
-    return 1 if n_fail else 0
+    print(f"\n{n_pass} pass / {n_fail} fail / {n_oracle_err} oracle-error  "
+          f"(artifact: {artifact})")
+    return 1 if n_fail or n_oracle_err else 0
 
 if __name__ == "__main__":
     sys.exit(main(sys.argv[1], sys.argv[2],
